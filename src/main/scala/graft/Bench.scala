@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the SF dir given
   * by SPARK_GRAFT_SF_DIR and prints ONE compact JSON line.
@@ -17,28 +16,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill on tmpfs: this host's disk stalls under iowait and
-      // was adding 10x noise to shuffle-heavy query timings
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir",
-        s"${Scratch.dir}/graft_warehouse_${Scratch.runToken}")
-      // ContextCleaner only releases dropped broadcasts / localCheckpoint
-      // blocks / shuffle files after a DRIVER GC notices the references
-      // died; the default periodic-GC interval (30 min) never fires
-      // inside one bench run, so across 259 queries the old gen fills
-      // with dead blocks and every late-run query pays mounting GC.
-      // Harmless on an idle host; on a loaded one it is the difference
-      // between 0.08 s and 30 s for an 11-row query (r12 driver-record
-      // tail spikes — attribution in BENCH_NOTES.md).
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     // session warmup so the first measured query doesn't pay one-time
     // JVM/codegen/scheduler costs; also primes each table's footer/schema
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -103,12 +81,7 @@ object Bench {
       name -> med
     }
     val gcTotalMs = gcLedger.values.sum
-    // Locale.ROOT: a comma-decimal default locale would emit "141,700"
-    // and break both JSON records (String.format is locale-sensitive)
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val qs = jsonObj(results)
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // DuckDB baseline on the SAME parquet: BASELINE.md publishes no
@@ -124,8 +97,7 @@ object Bench {
     val duckJson = results.keys.map { k =>
       "\"" + k + "\":" + duck.getOrElse(k, None).map(fmt).getOrElse("null")
     }.mkString("{", ",", "}")
-    val ratioJson = ratios.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val ratioJson = jsonObj(ratios)
     val duckTotal = duck.values.flatten.sum
     // oracles with no timing (timeout/error) would otherwise silently skew
     // duckdb_total vs the all-query Spark total — count them explicitly
@@ -148,19 +120,18 @@ object Bench {
     // a "zero regressions" claim — the r14 claim was falsified under one
     // reading of its own threshold. Pinned wording: a query regresses iff
     // (now - prev) > 0.3 s AND now / prev > 1.4.
-    val (regressBaseline, priorTimes, priorDuck) = priorRecordFull()
+    val prior = priorRecord()
     val lf = loadFactorCommon(
-      duck.collect { case (k, Some(v)) if v > 0 => k -> v }.toMap, priorDuck)
-    val regs = regressions(priorTimes, results.toMap, loadFactor = lf)
+      duck.collect { case (k, Some(v)) if v > 0 => k -> v }.toMap, prior.duckdb)
+    val regs = regressions(prior.queries, results.toMap, loadFactor = lf)
     val regJson = regs.map { case (q, prev, now) =>
       s"""{"q":"$q","prev":${fmt(prev)},"now":${fmt(now)}}"""
     }.mkString("[", ",", "]")
-    val warmJson = warmItems.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val warmJson = jsonObj(warmItems)
     val gcJson = gcLedger.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$Reps,"train_warmup_sec":${fmt(trainSec)},"warmup_items":$warmJson,"n":${results.size},"errors":$errs,"sf":"$sfDir","queries":$qs,"gc_ms":$gcJson,"gc_total_ms":$gcTotalMs,"duckdb":$duckJson,"ratio":$ratioJson,"duckdb_total":${fmt(duckTotal)},"duckdb_nulls":$duckNulls,"ratio_total":${fmt(ratioTotal)},"ratio_median":${fmt(ratioMedian)},"regress_baseline":${regressBaseline.map(b => "\"" + b + "\"").getOrElse("null")},"load_factor":${fmt(lf)},"regressions":$regJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$Reps,"train_warmup_sec":${fmt(trainSec)},"warmup_items":$warmJson,"n":${results.size},"errors":$errs,"sf":"$sfDir","queries":$qs,"gc_ms":$gcJson,"gc_total_ms":$gcTotalMs,"duckdb":$duckJson,"ratio":$ratioJson,"duckdb_total":${fmt(duckTotal)},"duckdb_nulls":$duckNulls,"ratio_total":${fmt(ratioTotal)},"ratio_median":${fmt(ratioMedian)},"regress_baseline":${prior.name.map(b => "\"" + b + "\"").getOrElse("null")},"load_factor":${fmt(lf)},"regressions":$regJson}"""
     try {
       val out = java.nio.file.Paths.get("target", "bench_full.json")
       java.nio.file.Files.createDirectories(out.getParent)
@@ -227,32 +198,18 @@ object Bench {
       common.iterator.map(priorDuck).sum)
   }
 
+  /** A committed bench record's file name, per-query Spark medians and
+    * per-query DuckDB seconds (empty when absent; [[loadFactorCommon]]). */
+  final case class PriorRecord(name: Option[String],
+      queries: Map[String, Double], duckdb: Map[String, Double])
+
   /** The prior committed per-query record: the file named by
     * SPARK_GRAFT_BENCH_BASELINE, else the newest BENCH_SELF_r*.json in
-    * the working directory (highest round number). Returns (filename,
-    * queries map); (None, empty) when no baseline exists or parsing
-    * fails — the bench then reports an empty regression list rather
-    * than failing.
+    * the working directory (highest round number). Empty when none
+    * exists or parsing fails — the regression list is then empty too.
     */
-  def priorRecord(): (Option[String], Map[String, Double]) = {
-    val (n, q, _) = priorRecordWithDuck()
-    (n, q)
-  }
-
-  /** [[priorRecord]] plus the baseline record's `duckdb_total` (0.0 when
-    * absent) — kept for spec compatibility; the load estimate itself now
-    * rides [[priorRecordFull]]'s per-query map.
-    */
-  def priorRecordWithDuck(): (Option[String], Map[String, Double], Double) = {
-    val (n, q, d) = priorRecordFull()
-    (n, q, d.values.sum)
-  }
-
-  /** [[priorRecord]] plus the baseline record's per-query `duckdb` map
-    * (empty when absent) — the denominator side of the common-queries
-    * load estimate ([[loadFactorCommon]]).
-    */
-  def priorRecordFull(): (Option[String], Map[String, Double], Map[String, Double]) = {
+  def priorRecord(): PriorRecord = {
+    val none = PriorRecord(None, Map.empty, Map.empty)
     try {
       val path = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
         .map(java.nio.file.Paths.get(_))
@@ -274,7 +231,7 @@ object Bench {
           val m = new com.fasterxml.jackson.databind.ObjectMapper()
           val node = m.readTree(txt)
           val qn = node.get("queries")
-          if (qn == null || !qn.isObject) (None, Map.empty, Map.empty)
+          if (qn == null || !qn.isObject) none
           else {
             import scala.jdk.CollectionConverters._
             val qs = qn.fieldNames().asScala.map { k =>
@@ -287,16 +244,24 @@ object Bench {
                 val v = dn.get(k)
                 if (v == null || v.isNull) None else Some(k -> v.asDouble())
               }.toMap
-            (Some(p.getFileName.toString), qs, ds)
+            PriorRecord(Some(p.getFileName.toString), qs, ds)
           }
-        case _ => (None, Map.empty, Map.empty)
+        case _ => none
       }
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] baseline record unavailable: $e")
-        (None, Map.empty, Map.empty)
+        none
     }
   }
+
+  // Locale.ROOT: a comma-decimal default locale would emit "141,700"
+  // and break both JSON records (String.format is locale-sensitive)
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def jsonObj(kvs: Iterable[(String, Double)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
   /** The single short JSON line the driver's bounded tail-capture parses —
     * MUST stay small enough to survive the capture (BenchSpec pins the
@@ -307,8 +272,6 @@ object Bench {
       sfDir: String, duckTotal: Double, duckNulls: Int, ratioTotal: Double,
       ratioMedian: Double, gcTotalMs: Long = 0L, regressions: Int = 0,
       loadFactor: Double = 1.0): String = {
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":$n,"errors":$errors,"train_warmup_sec":${fmt(trainSec)},"gc_total_ms":$gcTotalMs,"sf":"$sfDir","duckdb_total":${fmt(duckTotal)},"duckdb_nulls":$duckNulls,"ratio_total":${fmt(ratioTotal)},"ratio_median":${fmt(ratioMedian)},"regressions":$regressions,"load_factor":${fmt(loadFactor)},"full":"target/bench_full.json"}"""
   }
 
@@ -323,20 +286,10 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_DUCKDB_BENCH").contains("0") ||
       !java.nio.file.Files.exists(script)) return Map.empty
     try {
-      def jstr(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
       val oraclePath =
         java.nio.file.Paths.get(Scratch.dir, s"graft_oracle_${Scratch.runToken}.json")
       java.nio.file.Files.write(oraclePath,
-        SparkEntry.oracleSql.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-          .mkString("{", ",", "}").getBytes("UTF-8"))
+        Verify.oracleJson(SparkEntry.oracleSql).getBytes("UTF-8"))
       val timeout = sys.env.getOrElse("SPARK_GRAFT_DUCKDB_TIMEOUT", "120")
       // stderr is INHERITed (not piped): verbose DuckDB binder errors could
       // otherwise fill the ~64KB pipe buffer and deadlock the child before

@@ -21,7 +21,7 @@ object Scratch {
     */
   val runToken: String = java.util.UUID.randomUUID().toString.take(8)
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     // never descend THROUGH a symlink — a planted link inside the shared
     // scratch root must not let the sweep reach outside it
     if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))

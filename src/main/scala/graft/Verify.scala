@@ -1,40 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Usage:
+  * `Verify <sfDir> <outDir> [prefix...]`; with prefixes, only matching
+  * queries run and only their oracle SQL is written.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir",
-        s"${Scratch.dir}/graft_warehouse_${Scratch.runToken}")
-      // same long-session hygiene as Bench: release dead broadcast /
-      // checkpoint / shuffle state during the 260-query run instead of
-      // letting the old gen fill (see BENCH_NOTES.md, r13 attribution)
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, prefixes @ _*) = args
+    val selected = SparkEntry.queries.filter { case (n, _) =>
+      prefixes.isEmpty || prefixes.exists(n.startsWith) }
+    val spark = Sessions.local(Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     // Drop stale dumps from prior runs: a leftover directory for a since-
-    // renamed query would otherwise be picked up by the comparator as a
-    // rows-only entry and pollute the gate.
-    val live = SparkEntry.queries.keySet
+    // renamed (or, with prefixes, unselected) query would otherwise be
+    // picked up by the comparator as a rows-only entry and pollute the gate.
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !live.contains(f.getName))
-      .foreach { f =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
-        }
-        rm(f)
-      }
-    SparkEntry.queries.foreach { case (name, fn) =>
+      .filter(f => f.isDirectory && !selected.contains(f.getName))
+      .foreach(Scratch.deleteRecursively)
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,21 +26,27 @@ object Verify {
       }
       finally CacheTracker.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }))
     spark.stop()
   }
+
+  /** Query name → oracle SQL as one JSON object (also the DuckDB bench's input). */
+  def oracleJson(sql: Map[String, String]): String =
+    sql.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

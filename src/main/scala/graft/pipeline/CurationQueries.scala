@@ -1212,8 +1212,8 @@ object CurationQueries {
     * nodes (one aggregate over the whole edge stream), rounds batched
     * `batch` per eager localCheckpoint. The step references its input
     * ONCE (adj join est → histogram fold → docs left join), so b=2
-    * batching is safe from the 2^b plan blowup. r15 A/B (QueryProbe
-    * `kcoreab`, alternating reps, identical checksums): this form at
+    * batching is safe from the 2^b plan blowup. r15 A/B (BENCH_NOTES.md;
+    * b=2 re-confirmed in OPTIMIZATION_r16.md §1): this form at
     * b=2 beat the r14 dirty-delta (3.16 vs 4.52 s median, pairwise in
     * every rep) AND the r13 window form (3.94 s) — the dirty set's
     * semi-join + distinct + per-round convergence scan cost more than
@@ -1358,7 +1358,7 @@ object CurationQueries {
     import s.implicits._
     val (docs, adj, n) = linkGraph(s, dir)
     // r16: loop under LoopConf.tight — AQE's per-exchange jobs were ~90%
-    // of the gate (QueryProbe kcoreab: 2.20 → 1.47 s, checksum-identical)
+    // of the gate (2.20 → 1.47 s, checksum-identical; OPTIMIZATION_r16.md §1)
     graft.LoopConf.tight(s, n) { kcoreLoop(docs, adj, 10) }
       .select($"node", $"c".as("core")).orderBy($"node")
   }

@@ -147,7 +147,7 @@ object StreamQueries {
     * so the setting takes effect per gate invocation), restoring the
     * session's batch settings afterwards.
     *
-    * Floor profile (r10, StreamProfile at sf0.1): a gate's cost is
+    * Floor profile (r10 at sf0.1, BENCH_NOTES.md receipts): a gate's cost is
     * ~400-700 ms per micro-batch almost independent of rows — addBatch
     * is stage-scheduling + state-store task machinery (a 0-row
     * watermark batch still burns ~250 ms/task of executor time), wal +

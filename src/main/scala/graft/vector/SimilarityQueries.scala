@@ -439,8 +439,8 @@ object SimilarityQueries {
       .join(coreCl.select($"node".as("nbr"), $"cluster"), "nbr")
       .join(core, Seq("node"), "left_anti")
       .groupBy($"node").agg(min($"cluster").as("cluster"))
-    // r17 measured NULL-TO-LOSS (QueryProbe `dbscan`, alternating reps,
-    // checksum-identical — do not re-try): folding these three LEFT
+    // r17 measured NULL-TO-LOSS (OPTIMIZATION_r17.md §8; the variant was
+    // not kept in-tree — do not re-try): folding these three LEFT
     // JOINs into a tagged union + single groupBy lost every pair
     // (2.53 s vs 2.96 s median at sf0.1) — the joins are broadcast-hash
     // over tiny frames, while the union forces a real shuffle of all
@@ -1639,40 +1639,6 @@ object SimilarityQueries {
     * the residual pass is one scan of the persisted slices joined to
     * the k·M-row codebook; the report is M rows.
     */
-  /** r16 optimization-round probe: named eager stages of the composed
-    * IVF-PQ read path, cumulative from scratch (memoized codebooks stay
-    * warm) — QueryProbe's `ivfpq` case times each with caches released
-    * between reps.
-    */
-  private[graft] def ivfpqProbeStages(s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(String, () => Long)] = {
-    import s.implicits._
-    def structure() = ivfStructure(s, dir)
-    Seq(
-      "assigned (screenedCellRank)" -> (() => structure()._3.count()),
-      "probes" -> (() => {
-        val (c, v, _) = structure(); ivfProbesFor(s, v, c).count()
-      }),
-      "cand" -> (() => {
-        val (c, v, a) = structure()
-        val probes = ivfProbesFor(s, v, c)
-        a.select($"vec_id", $"nearest_label")
-          .join(broadcast(probes), $"nearest_label" === $"probe_label")
-          .where($"vec_id" =!= $"q_id")
-          .select($"q_id", $"vec_id").distinct().count()
-      }),
-      "subs" -> (() => pqSubs(s, dir).count()),
-      "enc (pqAssign)" -> (() => {
-        val subs = pqSubs(s, dir)
-        pqAssign(subs, pqCbRead(s, pqTrain(s, dir, subs))).count()
-      }),
-      "lut" -> (() => {
-        val subs = pqSubs(s, dir)
-        pqLut(subs, pqCbRead(s, pqTrain(s, dir, subs))).count()
-      }),
-      "full gate" -> (() => ivfpqSearch(s, dir).count()))
-  }
-
   val pqDistortion: Q = (s, dir) => {
     import s.implicits._
     import graft.functions.Exact.dsum
@@ -2139,7 +2105,7 @@ object SimilarityQueries {
   /** The tokenized word-bigram table (doc_id, bg ARRAY<STRING>) shared
     * by the lexical halves of [[hybridSearch]] and [[rrfFusion]]:
     * tokenization + bigram construction dominate both gates' lexical
-    * sides (QueryProbe r13: ~0.5 s of the 1.3 s lex stage at sf0.1),
+    * sides (r13, BENCH_NOTES.md: ~0.5 s of the 1.3 s lex stage at sf0.1),
     * and the table is a deterministic pure function of the corpus — so
     * it gets the codebook treatment (scratch parquet once per
     * (JVM, corpus dir), billed to bench warm-up; Verify builds it on
@@ -2740,8 +2706,8 @@ object SimilarityQueries {
     semanticDedupOn(hotCellCorpus(s, dir), centroidArr, HotCellCap)
   }
 
-  /** The planted hot-cell corpus (split from the gate for QueryProbe's
-    * stage attribution): real embeddings + a same-cell planted cohort.
+  /** The planted hot-cell corpus (split from the gate for the stage
+    * ledger in OPTIMIZATION_r17.md): real embeddings + a planted cohort.
     */
   private[graft] def hotCellCorpus(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {

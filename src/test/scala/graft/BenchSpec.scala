@@ -74,15 +74,16 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("prior record reader finds the newest BENCH_SELF and parses queries") {
-    val (name, qs) = Bench.priorRecord()
+    val prior = Bench.priorRecord()
     // the repo carries committed BENCH_SELF_r*.json records
-    assert(name.exists(_.startsWith("BENCH_SELF_r")), s"got $name")
-    assert(qs.nonEmpty && qs.values.forall(_ >= 0.0))
-    assert(qs.contains("q1_pricing_summary"), "per-query map missing keys")
+    assert(prior.name.exists(_.startsWith("BENCH_SELF_r")), s"got ${prior.name}")
+    assert(prior.queries.nonEmpty && prior.queries.values.forall(_ >= 0.0))
+    assert(prior.queries.contains("q1_pricing_summary"),
+      "per-query map missing keys")
     // the load-normalization denominator rides the same record
-    val (name2, qs2, duckTotal) = Bench.priorRecordWithDuck()
-    assert(name2 == name && qs2 == qs)
-    assert(duckTotal > 0.0, "baseline duckdb_total missing")
+    assert(prior.duckdb.contains("q1_pricing_summary"),
+      "baseline per-query duckdb map missing keys")
+    assert(prior.duckdb.values.sum > 0.0, "baseline duckdb_total missing")
   }
 
   test("load factor: clamped at 1.0, ratio above, 1.0 on missing totals") {

@@ -928,6 +928,14 @@ class PlanSpec extends SparkSpec {
       "the native minhash kernel must resolve through the SQL parser:\n" + bp)
     assert(!p.contains("CartesianProduct"),
       "candidates must come from the (band, mh) equi-join:\n" + p)
+    // the staged band statement is planned on its own: pin it too
+    val band = spark.table("graft_bandt_mh")
+    band.collect()
+    val bx = band.queryExecution.executedPlan.toString
+    assert(bx.contains("Generate"),
+      "the band statement's posexplode must be in its executed plan:\n" + bx)
+    assert(!bx.contains("CartesianProduct"),
+      "the band statement must not pair rows by a cartesian product:\n" + bx)
   }
 
   test("sql interval twin: grid explode feeds an equi-join, no cartesian") {
