@@ -23,15 +23,17 @@ object Bench {
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).schema catch { case _: Throwable => }
     }
-    // Model-training warm-up: the IVF/PQ codebooks and index layouts are
-    // memoized per (JVM, sf dir), so without this the FIRST artifact-
-    // sharing query billed ~4-5 s of Lloyd training to its own timing
-    // (the r8 sim_pq_adc_knn phantom regression). Training cost is still
-    // measured — it's just billed to an explicit line item instead of an
-    // arbitrary query, so round-over-round per-query deltas stay readable.
+    // Artifact warm-up: the codebooks, graphs and fixtures in
+    // [[Artifacts]] build on first use, so without this the FIRST
+    // artifact-sharing query billed ~4-5 s of Lloyd training to its own
+    // timing (the r8 sim_pq_adc_knn phantom regression). Build cost is
+    // still measured — it's just billed to an explicit line item instead
+    // of an arbitrary query, itemized per entry (r11 verdict: an
+    // un-itemized lump is unauditable), so round-over-round per-query
+    // deltas stay readable.
     val trainT0 = System.nanoTime()
     val warmItems: Seq[(String, Double)] =
-      try graft.vector.SimilarityQueries.warmTraining(spark, sfDir)
+      try Artifacts.warm(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] training warmup failed: ${e.getMessage}")
         Seq.empty

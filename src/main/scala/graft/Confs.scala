@@ -11,9 +11,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Confs {
   def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.get(k) }
+    // getOption: a key with no value and no default was unset, and is
+    // unset again afterwards
+    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally saved.foreach { case (k, v) => s.conf.set(k, v) }
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

@@ -27,20 +27,18 @@ object LakeQueries {
 
   /** One partitioned copy of events per (JVM, sf dir); built lazily and
     * reused by both queries — the layout is the fixture, the queries
-    * gate the reads. Thread-safe via the synchronized map (Verify runs
+    * gate the reads. Thread-safe via [[Artifacts.memo]] (Verify runs
     * queries sequentially, but nothing should rely on that).
     */
-  private val built = scala.collection.mutable.Map[String, String]()
   private def partitionedEvents(s: org.apache.spark.sql.SparkSession,
-                                dir: String): String = synchronized {
-    built.getOrElseUpdate(dir, {
+                                dir: String): String =
+    Artifacts.memo(s"lake.partitionedEvents|$dir") {
       val path = s"${Scratch.dir}/graft_lake_events_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
       Tables(s, dir, "events")
         .write.partitionBy("event_type").mode("overwrite").parquet(path)
       path
-    })
-  }
+    }
 
   /** Static pruning: aggregate one event type out of the partitioned
     * layout. At scale this reads |purchases|/|events| of the table —
@@ -234,10 +232,9 @@ object LakeQueries {
     * keys doubled, new keys inserted) against the oracle's relational
     * rendition of the same merge.
     */
-  private val mergedTbl = scala.collection.mutable.Map[String, String]()
   private def mergedOrders(s: org.apache.spark.sql.SparkSession,
-                           dir: String): String = synchronized {
-    mergedTbl.getOrElseUpdate(dir, {
+                           dir: String): String =
+    Artifacts.memo(s"lake.mergedOrders|$dir") {
       import s.implicits._
       val path = s"${Scratch.dir}/graft_lake_merge_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
@@ -266,8 +263,7 @@ object LakeQueries {
         merged.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
       }
       path
-    })
-  }
+    }
 
   val mergePartition: Q = (s, dir) => {
     import s.implicits._
@@ -313,10 +309,9 @@ object LakeQueries {
     * against the plain single-file oracle; LayoutSpec asserts the
     * file-count drop and the untouched-partition discipline.
     */
-  private val compacted = scala.collection.mutable.Map[String, String]()
   private def compactedEvents(s: org.apache.spark.sql.SparkSession,
-                              dir: String): String = synchronized {
-    compacted.getOrElseUpdate(dir, {
+                              dir: String): String =
+    Artifacts.memo(s"lake.compactedEvents|$dir") {
       val path = s"${Scratch.dir}/graft_lake_compact_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
       Tables(s, dir, "events").repartition(24)
@@ -324,8 +319,7 @@ object LakeQueries {
       graft.operators.Compaction.compactPartitioned(s, path,
         targetBytes = 256L * 1024 * 1024)
       path
-    })
-  }
+    }
 
   val compactSmallFiles: Q = (s, dir) => {
     import s.implicits._
@@ -353,10 +347,9 @@ object LakeQueries {
     * LayoutSpec additionally asserts the file-level mechanics (old
     * manifests' files survive on disk, compaction shrinks the live set).
     */
-  private val snapTbl = scala.collection.mutable.Map[String, String]()
   private def snapshotOrders(s: org.apache.spark.sql.SparkSession,
-                             dir: String): String = synchronized {
-    snapTbl.getOrElseUpdate(dir, {
+                             dir: String): String =
+    Artifacts.memo(s"lake.snapshotOrders|$dir") {
       import s.implicits._
       val root = s"${Scratch.dir}/graft_lake_snap_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
@@ -384,8 +377,7 @@ object LakeQueries {
         carry = !_.contains("o_orderstatus=F/"))
       operators.Snapshots.compactCommit(s, root, "o_orderstatus")
       root
-    })
-  }
+    }
 
   val snapshotRead: Q = (s, dir) => {
     import s.implicits._
@@ -484,10 +476,9 @@ object LakeQueries {
     * 1000 executors this is metadata-only schema reconciliation, no
     * data rewrite of old files ever happens.
     */
-  private val evoTbl = scala.collection.mutable.Map[String, String]()
   private def evoOrders(s: org.apache.spark.sql.SparkSession,
-                        dir: String): String = synchronized {
-    evoTbl.getOrElseUpdate(dir, {
+                        dir: String): String =
+    Artifacts.memo(s"lake.evoOrders|$dir") {
       import s.implicits._
       val root = s"${Scratch.dir}/graft_lake_evo_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
@@ -512,8 +503,7 @@ object LakeQueries {
       operators.Snapshots.commit(s, root, merged, "o_orderstatus",
         carry = !_.contains("o_orderstatus=F/"))
       root
-    })
-  }
+    }
 
   val schemaEvolution: Q = (s, dir) => {
     import s.implicits._
@@ -599,10 +589,9 @@ object LakeQueries {
     array((0 until 3).map(i =>
       graft.functions.KeyHash.bucket(s"$i|blf|", key, 65536).cast("int")): _*)
 
-  private val bloomTbl = scala.collection.mutable.Map[String, (String, String)]()
   private def bloomLayout(s: org.apache.spark.sql.SparkSession,
-                          dir: String): (String, String) = synchronized {
-    bloomTbl.getOrElseUpdate(dir, {
+                          dir: String): (String, String) =
+    Artifacts.memo(s"lake.bloomLayout|$dir") {
       import s.implicits._
       val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
       val lay = s"${Scratch.dir}/graft_bloom_lay_${dirKey}_${Scratch.runToken}"
@@ -620,8 +609,7 @@ object LakeQueries {
         .agg(array_sort(collect_set($"bit")).as("bits"))
         .write.mode("overwrite").parquet(man)
       (lay, man)
-    })
-  }
+    }
 
   val bloomIndex: Q = (s, dir) => {
     import s.implicits._
@@ -745,7 +733,7 @@ object LakeQueries {
     * function of the read-only corpus — the vacuum gate copies a
     * memoized build instead of re-committing per invocation.
     */
-  private[graft] def vacuumBuildFixture(s: org.apache.spark.sql.SparkSession, dir: String,
+  private[graft] def buildVacuumFixture(s: org.apache.spark.sql.SparkSession, dir: String,
       root: String): Unit = {
     import s.implicits._
     val orders = Tables(s, dir, "orders")
@@ -768,29 +756,24 @@ object LakeQueries {
     vacuumMergeIn(s, root, u2)
   }
 
-  private val lakeBaseFixturePaths = new graft.KeyedMemo[String]
-
   /** The v1 base commit (even orderkeys, 3 columns, status-partitioned)
     * that [[deleteKeys]], [[deletionVectors]] and [[partitionEvolution]]
-    * each rebuilt per invocation — r17: built ONCE per (JVM, dir) as a
-    * relocation-safe fixture (Snapshots manifests store relative paths)
-    * and [[Scratch.copyTree]]-copied per invocation, the r15 vacuum
-    * discipline. Billed to bench warm-up (`lake_base_fixture`).
+    * each rebuilt per invocation — r17: built ONCE as a relocation-safe
+    * fixture (Snapshots manifests store relative paths), the
+    * [[Artifacts.LakeV1]] entry, and [[Scratch.copyTree]]-copied per
+    * invocation, the r15 vacuum discipline. Billed to bench warm-up.
     */
   private[graft] def lakeBaseFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    lakeBaseFixturePaths.getOrBuild(dir) {
-      ArtifactCache.publishStaged("lakev1", dir, Seq("orders")) {
-        import s.implicits._
-        val root = s"${Scratch.dir}/graft_lake_v1fix_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
-        val base = Tables(s, dir, "orders").filter($"o_orderkey" % 2 === 0)
-          .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
-          .repartition($"o_orderstatus")
-        operators.Snapshots.commit(s, root, base, "o_orderstatus")
-        root
-      }
-    }
+      dir: String): String = Artifacts.LakeV1.path(s, dir)
+
+  private[graft] def buildLakeBaseFixture(s: org.apache.spark.sql.SparkSession,
+      dir: String, out: String): Unit = {
+    import s.implicits._
+    val base = Tables(s, dir, "orders").filter($"o_orderkey" % 2 === 0)
+      .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
+      .repartition($"o_orderstatus")
+    operators.Snapshots.commit(s, out, base, "o_orderstatus")
+  }
 
   /** A throwaway copy of [[lakeBaseFixture]] under a fresh
     * per-invocation root (the gates MUTATE the tree with further
@@ -806,24 +789,14 @@ object LakeQueries {
     root
   }
 
-  private val vacFixturePaths = new graft.KeyedMemo[String]
-
-  /** The memoized pre-vacuum fixture path — exposed so the bench
-    * warm-up can bill the three-commit build explicitly (the codebook
+  /** The pre-vacuum fixture, the [[Artifacts.VacFix]] entry — so the
+    * bench warm-up bills the three-commit build explicitly (the codebook
     * treatment) instead of the first gate invocation paying it.
+    * Snapshots manifests store RELATIVE paths (r15), so the fixture
+    * tree is relocation-safe and can live in the cross-JVM cache.
     */
   private[graft] def vacuumFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    vacFixturePaths.getOrBuild(dir) {
-      // Snapshots manifests store RELATIVE paths (r15), so the fixture
-      // tree is relocation-safe and can live in the cross-JVM cache
-      ArtifactCache.publishStaged("vacfix", dir, Seq("orders")) {
-        val base = s"${Scratch.dir}/graft_lake_vacfix_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
-        vacuumBuildFixture(s, dir, base)
-        base
-      }
-    }
+      dir: String): String = Artifacts.VacFix.path(s, dir)
 
   val vacuumRetention: Q = (s, dir) => {
     import s.implicits._

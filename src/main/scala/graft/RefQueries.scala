@@ -12,11 +12,6 @@ import graft.sources.{CsvIngest, Gen}
 object RefQueries {
   import Queries.Q
 
-  /** Per-JVM token for temp-file paths: two harness processes hitting the
-    * same sf dir concurrently must not share scratch CSVs.
-    */
-  private[graft] def runToken: String = Scratch.runToken
-
   /** O14 — deterministic synthetic locations (reference: parallel CSV
     * generator, `cmd/gen_file/main.go`).
     */
@@ -28,7 +23,7 @@ object RefQueries {
     */
   val csvRoundtrip: Q = (s, _) => {
     val tmp = s"${graft.Scratch.dir}/graft_csv_roundtrip_" +
-      RefQueries.runToken
+      Scratch.runToken
     Gen.writeCsv(Gen.locations(s, 500), tmp)
     CsvIngest.readLocations(s, tmp).toDF().orderBy("locid")
   }
@@ -44,7 +39,7 @@ object RefQueries {
     */
   val csvPermissive: Q = (s, _) => {
     import s.implicits._
-    val tmp = s"${graft.Scratch.dir}/graft_csv_permissive_" + runToken
+    val tmp = s"${graft.Scratch.dir}/graft_csv_permissive_" + Scratch.runToken
     val lines = (0 until 140).map { id =>
       if (id % 7 == 3) s"oops_truncated_line_$id"
       else s"$id,${id * 3L},name$id"
@@ -166,7 +161,7 @@ object RefQueries {
     // SFs, or two harness invocations on the SAME sf dir — must not
     // overwrite each other's CSV mid-read
     val tmp = s"${graft.Scratch.dir}/graft_gen_1m_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + RefQueries.runToken
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
     Gen.writeCsv(Gen.locations(s, 1000000L), tmp)
     CsvIngest.readLocations(s, tmp).toDF().agg(
       count(lit(1)).as("n_rows"),
@@ -193,7 +188,7 @@ object RefQueries {
   val jsonRoundtrip: Q = (s, dir) => {
     import s.implicits._
     val tmp = s"${graft.Scratch.dir}/graft_json_docs_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + RefQueries.runToken
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
     Tables(s, dir, "documents").select($"doc_id", $"lang", $"text")
       .write.mode("overwrite").json(tmp)
     s.read.schema("doc_id BIGINT, lang STRING, text STRING").json(tmp)
@@ -222,7 +217,7 @@ object RefQueries {
     import s.implicits._
     import graft.functions.Exact._
     val tmp = s"${graft.Scratch.dir}/graft_orc_orders_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + RefQueries.runToken
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
     Tables(s, dir, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice")
       .write.mode("overwrite").orc(tmp)
@@ -256,7 +251,7 @@ object RefQueries {
     import s.implicits._
     import graft.functions.Exact._
     val tmp = s"${graft.Scratch.dir}/graft_csvgz_orders_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + RefQueries.runToken
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
     // explicit MICROSECOND format on both sides: Spark's default CSV
     // timestampNTZFormat carries millisecond precision only, so a corpus
     // regeneration with sub-millisecond order dates would silently
@@ -302,7 +297,7 @@ object RefQueries {
     import s.implicits._
     import graft.functions.Exact._
     val tmp = s"${graft.Scratch.dir}/graft_avro_orders_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + RefQueries.runToken
+      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Scratch.runToken
     graft.sources.AvroIO.write(
       Tables(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
@@ -439,7 +434,7 @@ object RefQueries {
     import s.implicits._
     import graft.sinks.JdbcUpsertSink
     val n = 2000L
-    val url = s"jdbc:derby:${graft.Scratch.dir}/jdbc_read_$runToken;create=true"
+    val url = s"jdbc:derby:${graft.Scratch.dir}/jdbc_read_${Scratch.runToken};create=true"
     JdbcUpsertSink.ensureTable(url, JdbcUpsertSink.DerbyUpsert)
     JdbcUpsertSink.write(Gen.locations(s, n).as[graft.model.Location], url,
       parallelism = 4, dialect = JdbcUpsertSink.DerbyUpsert)
@@ -469,7 +464,7 @@ object RefQueries {
     */
   val jsonPermissive: Q = (s, _) => {
     import s.implicits._
-    val tmp = s"${graft.Scratch.dir}/graft_json_permissive_" + runToken
+    val tmp = s"${graft.Scratch.dir}/graft_json_permissive_" + Scratch.runToken
     val lines = (0 until 140).map { id =>
       if (id % 7 == 3) s"""{"a": $id, "b": """ // truncated mid-object
       else s"""{"a": $id, "b": ${id * 3L}, "name": "name$id"}"""

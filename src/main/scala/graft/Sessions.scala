@@ -17,6 +17,9 @@ object Sessions {
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
+    // read early in context start-up: only the version, OS and Java
+    // lines logged before it print at INFO
+    "spark.log.level" -> "WARN",
     // shuffle/spill on tmpfs: this host's disk stalls under iowait and
     // was adding 10x noise to shuffle-heavy query timings
     "spark.local.dir" -> Scratch.sparkLocalDir,
@@ -32,12 +35,9 @@ object Sessions {
     // tail spikes — attribution in BENCH_NOTES.md).
     "spark.cleaner.periodicGC.interval" -> "90s")
 
-  /** A session with [[settings]], logging at WARN. */
-  def local(cpus: Int): SparkSession = {
-    val spark = settings(cpus)
+  /** A session with [[settings]]. */
+  def local(cpus: Int): SparkSession =
+    settings(cpus)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

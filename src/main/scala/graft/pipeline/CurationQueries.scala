@@ -1210,7 +1210,7 @@ object CurationQueries {
 
   /** Fixed-round h-index iteration: every round recomputes h for ALL
     * nodes (one aggregate over the whole edge stream), rounds batched
-    * `batch` per eager localCheckpoint. The step references its input
+    * [[KcoreBatch]] per eager localCheckpoint. The step references its input
     * ONCE (adj join est → histogram fold → docs left join), so b=2
     * batching is safe from the 2^b plan blowup. r15 A/B (BENCH_NOTES.md;
     * b=2 re-confirmed in OPTIMIZATION_r16.md §1): this form at
@@ -1221,8 +1221,10 @@ object CurationQueries {
     * for this shape (4.13 s: the histogram fold's deeper per-step plan
     * eats the saved checkpoints, unlike pprLoop's flat step).
     */
+  private val KcoreBatch = 2
+
   private[graft] def kcoreLoop(docs: org.apache.spark.sql.DataFrame,
-      adj: org.apache.spark.sql.DataFrame, rounds: Int, batch: Int = 2):
+      adj: org.apache.spark.sql.DataFrame, rounds: Int):
       org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -1243,7 +1245,7 @@ object CurationQueries {
       .localCheckpoint(true)
     var r = 0
     while (r < rounds) {
-      val b = math.min(batch, rounds - r)
+      val b = math.min(KcoreBatch, rounds - r)
       est = (1 to b).foldLeft(est)((e, _) => step(e)).localCheckpoint(true)
       r += b
     }
@@ -1267,69 +1269,59 @@ object CurationQueries {
       .localCheckpoint(true)
   }
 
-  private val linkGraphPaths = new graft.KeyedMemo[(String, String, Long)]
-
-  /** Scratch-parquet memo of the deterministic 3-out link graph — the
-    * node list and undirected adjacency every graph-fixpoint gate
-    * iterates over ([[kcore]], [[labelPropagation]], [[bfsLayers]],
+  /** The deterministic 3-out link graph, the [[graft.Artifacts.LinkGraph]]
+    * entry — the node list and undirected adjacency every graph-fixpoint
+    * gate iterates over ([[kcore]], [[labelPropagation]], [[bfsLayers]],
     * [[closenessLandmarks]], [[assortativity]], [[modularity]]). The
     * build is a pure function of the read-only corpus, so it gets the
-    * codebook treatment (the r11 shared-artifact pattern): built once
-    * per (JVM, corpus dir), billed to bench warm-up, and each gate's
-    * plan starts from a parquet scan instead of re-running the
-    * docs-checkpoint + count + distinct edge build per query — six
-    * gates previously paid that identical prefix every run.
+    * codebook treatment (the r11 shared-artifact pattern): billed to
+    * bench warm-up, and each gate's plan starts from a parquet scan
+    * instead of re-running the docs-checkpoint + count + distinct edge
+    * build per query — six gates previously paid that identical prefix
+    * every run.
     */
   private[graft] def linkGraph(s: org.apache.spark.sql.SparkSession,
       dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Long) = {
-    val (nodesP, adjP, n) = linkGraphPaths.getOrBuild(dir) {
-      val base = graft.ArtifactCache.publishStaged(
-        "linkgraph", dir, Seq("documents")) {
-        import s.implicits._
-        val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val b = s"${graft.Scratch.dir}/graft_linkgraph_" +
-          s"${graft.Scratch.runToken}_$dirKey"
-        val docs = Tables(s, dir, "documents").select($"doc_id")
-          .localCheckpoint(true)
-        val nn = docs.count()
-        docs.write.mode("overwrite").parquet(s"$b/nodes")
-        linkAdj(docs, nn).write.mode("overwrite").parquet(s"$b/adj")
-        b
-      }
-      // n re-derives from the artifact so a cross-JVM cache hit skips
-      // the docs scan entirely (one tiny count job, memoized per JVM)
-      (s"$base/nodes", s"$base/adj", s.read.parquet(s"$base/nodes").count())
+    val base = graft.Artifacts.LinkGraph.path(s, dir)
+    // n re-derives from the artifact so a cross-JVM cache hit skips the
+    // docs scan entirely (one tiny count job, memoized per JVM)
+    val n = graft.Artifacts.memo(s"linkgraph.n|$dir") {
+      s.read.parquet(s"$base/nodes").count()
     }
-    (s.read.parquet(nodesP), s.read.parquet(adjP), n)
+    (s.read.parquet(s"$base/nodes"), s.read.parquet(s"$base/adj"), n)
   }
 
-  private val linkDirectedPaths = new graft.KeyedMemo[String]
+  private[graft] def buildLinkGraph(s: org.apache.spark.sql.SparkSession,
+      dir: String, out: String): Unit = {
+    import s.implicits._
+    val docs = Tables(s, dir, "documents").select($"doc_id")
+      .localCheckpoint(true)
+    docs.write.parquet(s"$out/nodes")
+    linkAdj(docs, docs.count()).write.parquet(s"$out/adj")
+  }
 
-  /** Scratch-parquet memo of the DIRECTED deterministic 3-out edge list
-    * (distinct, self-loops dropped) — the input the directed-walk gates
-    * ([[pagerankLinks]], [[pprSeeds]], [[hitsScores]]) iterate over.
-    * r16: those gates re-derived it per invocation (docs checkpoint +
-    * count + generator + distinct per query); it is the same pure
-    * function of the read-only corpus as [[linkGraph]], so it gets the
-    * same artifact treatment, billed to warm-up on first touch. Built
-    * FROM the linkGraph nodes artifact (one parquet scan, no second
-    * docs count).
+  /** The DIRECTED deterministic 3-out edge list (distinct, self-loops
+    * dropped), the [[graft.Artifacts.LinkDirected]] entry — the input
+    * the directed-walk gates ([[pagerankLinks]], [[pprSeeds]],
+    * [[hitsScores]]) iterate over. r16: those gates re-derived it per
+    * invocation (docs checkpoint + count + generator + distinct per
+    * query); it is the same pure function of the read-only corpus as
+    * [[linkGraph]], so it gets the same artifact treatment. Built FROM
+    * the linkGraph nodes artifact (one parquet scan, no second docs
+    * count).
     */
   private[graft] def linkDirected(s: org.apache.spark.sql.SparkSession,
       dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Long) = {
     val (nodes, _, n) = linkGraph(s, dir)
-    val path = linkDirectedPaths.getOrBuild(dir) {
-      graft.ArtifactCache.publishStaged("linkdirected", dir, Seq("documents")) {
-        val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val b = s"${graft.Scratch.dir}/graft_linkdirected_" +
-          s"${graft.Scratch.runToken}_$dirKey"
-        linkEdges(nodes, n).distinct().write.mode("overwrite").parquet(b)
-        b
-      }
-    }
-    (nodes, s.read.parquet(path), n)
+    (nodes, s.read.parquet(graft.Artifacts.LinkDirected.path(s, dir)), n)
+  }
+
+  private[graft] def buildLinkDirected(s: org.apache.spark.sql.SparkSession,
+      dir: String, out: String): Unit = {
+    val (nodes, _, n) = linkGraph(s, dir)
+    linkEdges(nodes, n).distinct().write.parquet(out)
   }
 
   /** The matching oracle prefix: docs/stats/edges0/und/adj CTEs shared
@@ -1734,11 +1726,9 @@ object CurationQueries {
       .select($"doc_id".as("node"), coalesce($"d", lit(999999L)).as("d"))
   }
 
-  private val landmarkBfsPaths = new graft.KeyedMemo[(String, Long)]
-
   /** ONE shared 4-landmark frontier BFS over the link graph (landmarks
-    * 0, n/3, 2n/3, n−1; 16-round budget), persisted through
-    * [[graft.ArtifactCache]] — landmark 0 IS [[bfsLayers]]' source, so
+    * 0, n/3, 2n/3, n−1; 16-round budget), the [[graft.Artifacts.LmBfs]]
+    * entry — landmark 0 IS [[bfsLayers]]' source, so
     * the two graph-BFS gates previously ran SEPARATE frontier loops
     * whose per-batch job floors were the whole weak-list residual
     * (r15 verdict #4); they now derive from one settled (node, lm, d)
@@ -1752,17 +1742,15 @@ object CurationQueries {
     */
   private[graft] def landmarkBfs(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, Long) = {
-    val (path, n) = landmarkBfsPaths.getOrBuild(dir) {
-      val (docs, adj, nn) = linkGraph(s, dir)
-      val lms = Seq(0L, nn / 3, (2 * nn) / 3, nn - 1)
-      val p = graft.ArtifactCache.getOrBuild("lmbfs", dir,
-        Seq("documents"), version = "1") { tmp =>
-        frontierBfs(docs, adj, lms.zipWithIndex, rounds = 16)
-          .write.mode("overwrite").parquet(tmp)
-      }
-      (p, nn)
-    }
-    (s.read.parquet(path), n)
+    val (_, _, n) = linkGraph(s, dir)
+    (s.read.parquet(graft.Artifacts.LmBfs.path(s, dir)), n)
+  }
+
+  private[graft] def buildLandmarkBfs(s: org.apache.spark.sql.SparkSession,
+      dir: String, out: String): Unit = {
+    val (docs, adj, n) = linkGraph(s, dir)
+    val lms = Seq(0L, n / 3, (2 * n) / 3, n - 1)
+    frontierBfs(docs, adj, lms.zipWithIndex, rounds = 16).write.parquet(out)
   }
 
   val bfsLayers: Q = (s, dir) => {

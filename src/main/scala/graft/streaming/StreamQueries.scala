@@ -121,16 +121,14 @@ object StreamQueries {
     * alongside so gates that need the staging-time scalar after the
     * stream don't re-derive it.
     */
-  private val stagedIn =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private def stagedInputs(gate: String, dir: String)(build: String => Long):
       (String, Long) =
-    stagedIn.computeIfAbsent(s"$gate|$dir", { _ =>
+    graft.Artifacts.memo(s"stream.staged|$gate|$dir") {
       val in = s"${graft.Scratch.dir}/graft_stream_in_" +
-        s"${RefQueries.runToken}_${gate}_${invocation.incrementAndGet()}"
+        s"${graft.Scratch.runToken}_${gate}_${invocation.incrementAndGet()}"
       Files.createDirectories(Paths.get(in))
       (in, build(in))
-    })
+    }
 
   /** Fresh (output, checkpoint) dirs for one streaming-gate invocation:
     * a rerun in the same JVM must not hit a checkpoint that says the
@@ -138,7 +136,7 @@ object StreamQueries {
     */
   private def freshOutCk(): (String, String) = {
     val root = s"${graft.Scratch.dir}/graft_stream_" +
-      s"${RefQueries.runToken}_${invocation.incrementAndGet()}"
+      s"${graft.Scratch.runToken}_${invocation.incrementAndGet()}"
     (s"$root/out", s"$root/ck")
   }
 
@@ -1127,7 +1125,7 @@ object StreamQueries {
       }
     }
     val root = s"${graft.Scratch.dir}/graft_lake_stream_" +
-      s"${RefQueries.runToken}_${invocation.incrementAndGet()}"
+      s"${graft.Scratch.runToken}_${invocation.incrementAndGet()}"
     graft.Scratch.copyTree(Paths.get(fixRoot), Paths.get(root))
     val csvSchema = "o_orderkey BIGINT, o_totalprice DOUBLE, src STRING, " +
       "seq BIGINT, o_orderstatus STRING"
@@ -1239,9 +1237,6 @@ object StreamQueries {
     * alive by the memo) and the restart appends its own — the final
     * read sees both, exactly as a restarted production sink would.
     */
-  private val restartFixture =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
   val streamRestartResume: Q = (s, dir) => {
     import s.implicits._
     import graft.functions.Exact.dsum
@@ -1286,9 +1281,9 @@ object StreamQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination())
-    val (runIn, fixOut, fixCk) = restartFixture.computeIfAbsent(dir, { _ =>
+    val (runIn, fixOut, fixCk) = graft.Artifacts.memo(s"stream.restart|$dir") {
       val in = s"${graft.Scratch.dir}/graft_stream_" +
-        s"${RefQueries.runToken}_${invocation.incrementAndGet()}_in"
+        s"${graft.Scratch.runToken}_${invocation.incrementAndGet()}_in"
       Files.createDirectories(Paths.get(in))
       def arrive(name: String): Unit = {
         Files.copy(Paths.get(s"$staged/$name.csv"), Paths.get(s"$in/$name.csv"))
@@ -1304,7 +1299,7 @@ object StreamQueries {
       // restart discovers it as new input
       arrive("b3")
       (in, o, c)
-    })
+    }
     val (out, ck) = freshOutCk()
     graft.Scratch.copyTree(Paths.get(fixOut), Paths.get(out))
     graft.Scratch.copyTree(Paths.get(fixCk), Paths.get(ck))

@@ -41,55 +41,48 @@ object DedupQueries {
     * instead (r11 ADVICE, widened r12 after review). One-value driver
     * check, memoized per (JVM, sf dir).
     */
-  private val variantIdChecked = new graft.KeyedMemo[java.lang.Boolean]
   private[graft] def assertVariantIdHeadroom(
       s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     import s.implicits._
-    variantIdChecked.getOrBuild(dir) {
+    graft.Artifacts.memo(s"dedup.variantIdHeadroom|$dir") {
       val maxId = Tables(s, dir, "documents")
         .agg(max($"doc_id")).head.getLong(0)
       require(maxId < 10000L,
         s"planted-variant id scheme assumes doc_id < 10000; max is $maxId " +
           "— the corpus drifted, widen the variant offset")
-      java.lang.Boolean.TRUE
     }
-    ()
   }
 
-  private val shingledPaths = new graft.KeyedMemo[String]
-
+  // r16: the [[graft.Artifacts.Shingled]] entry — five gates each re-ran
+  // the tokenize+shingle pass per invocation; the shingle table is the
+  // signature-index input a production dedup pipeline persists (the
+  // clusterCorpusEdges discipline, one shelf over)
   private[graft] def shingledCorpus(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    // r16: scratch-parquet memo per (JVM, dir) — five gates each re-ran
-    // the tokenize+shingle pass per invocation; the shingle table is the
-    // signature-index input a production dedup pipeline persists (the
-    // clusterCorpusEdges discipline, one shelf over)
-    val path = shingledPaths.getOrBuild(dir) {
-      assertVariantIdHeadroom(s, dir)
-      // repartition BEFORE the per-row work: the one-file documents scan
-      // is a single partition, and tokenize+shingle+minhash would
-      // otherwise run one-core (the r12 single-partition lesson, r14)
-      val base = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id", TextAnalysis.tokensOnce($"text").as("toks"))
-        .filter(size($"toks") >= 15)
-      val corpus = base.select(explode(array(
-          struct($"doc_id", $"toks"),
-          struct(($"doc_id" + 10000).as("doc_id"),
-            slice($"toks", lit(1), size($"toks") - 5).as("toks")))).as("r"))
-        .select($"r.doc_id", $"r.toks")
-      val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val p = s"${graft.Scratch.dir}/graft_shingled_" +
-        s"${graft.Scratch.runToken}_$dirKey"
-      corpus.select($"doc_id", wordShingles($"toks", 3).as("sh"))
-        .write.mode("overwrite").parquet(p)
-      p
-    }
+      dir: String): org.apache.spark.sql.DataFrame =
     // read up to three times per gate (signature build + both sides of
     // the exact-Jaccard verify): persist the parquet read
     graft.CacheTracker.persistTracked(
-      s.read.schema("doc_id BIGINT, sh ARRAY<STRING>").parquet(path))
+      s.read.schema("doc_id BIGINT, sh ARRAY<STRING>")
+        .parquet(graft.Artifacts.Shingled.path(s, dir)))
+
+  private[graft] def buildShingledCorpus(s: org.apache.spark.sql.SparkSession,
+      dir: String, out: String): Unit = {
+    import s.implicits._
+    assertVariantIdHeadroom(s, dir)
+    // repartition BEFORE the per-row work: the one-file documents scan
+    // is a single partition, and tokenize+shingle+minhash would
+    // otherwise run one-core (the r12 single-partition lesson, r14)
+    val base = Tables(s, dir, "documents")
+      .repartition(s.sparkContext.defaultParallelism)
+      .select($"doc_id", TextAnalysis.tokensOnce($"text").as("toks"))
+      .filter(size($"toks") >= 15)
+    val corpus = base.select(explode(array(
+        struct($"doc_id", $"toks"),
+        struct(($"doc_id" + 10000).as("doc_id"),
+          slice($"toks", lit(1), size($"toks") - 5).as("toks")))).as("r"))
+      .select($"r.doc_id", $"r.toks")
+    corpus.select($"doc_id", wordShingles($"toks", 3).as("sh"))
+      .write.parquet(out)
   }
 
   /** Banded LSH candidate pairs at an EXPLICIT (k, r) shape — the
@@ -369,20 +362,16 @@ object DedupQueries {
     * once; each gate still runs its own connected-components pass (the
     * clustering is `dedup_cluster_canonical`'s operator under test and
     * must stay visible to the bench). The memo stores scratch-PARQUET
-    * paths, not DataFrames (the [[graft.vector.SimilarityQueries]]
-    * ivfCbPath pattern): a checkpointed frame is bound to the creating
-    * SparkContext and would dangle if a later session in the same JVM
-    * hit the same dir, while a path re-reads cleanly from any session.
+    * paths, not DataFrames (the [[graft.Artifacts]] entry pattern): a
+    * checkpointed frame is bound to the creating SparkContext and would
+    * dangle if a later session in the same JVM hit the same dir, while
+    * a path re-reads cleanly from any session.
     */
-  private val clusterMemo =
-    scala.collection.mutable.Map[String, (String, String)]()
-
-  /** (corpus doc_ids, CC labels (node, comp)) for the cluster gates. */
   private def clusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    val (idsPath, edgesPath) = synchronized {
-      clusterMemo.getOrElseUpdate(dir, clusterCorpusEdges(s, dir))
+    val (idsPath, edgesPath) = graft.Artifacts.memo(s"dedup.cluster|$dir") {
+      clusterCorpusEdges(s, dir)
     }
     val labels = graft.operators.ConnectedComponents
       .run(s.read.parquet(edgesPath), "doc_a", "doc_b")
@@ -420,7 +409,7 @@ object DedupQueries {
     // caches are dead weight — drop them immediately.
     val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
     def path(name: String) = s"${graft.Scratch.dir}/graft_cluster_" +
-      s"${name}_${graft.RefQueries.runToken}_$dirKey"
+      s"${name}_${graft.Scratch.runToken}_$dirKey"
     val (idsPath, edgesPath) = (path("ids"), path("edges"))
     lshCandidates(bands, "doc_id")
       .join(shingled.toDF("doc_a", "sh_a"), "doc_a")

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[ArtifactCache]]'s slot semantics: hits are content-keyed,
-  * a regenerated corpus sweeps ONLY its own (name, dir) slot, sibling
-  * names sharing a prefix are untouched (the r15 bug: `nng`'s sweep ate
-  * `nng_ins`'s entries), and two corpus dirs coexist.
+/** Pins the cross-JVM cache under [[Artifacts]] ([[Artifacts.publish]]):
+  * hits are content-keyed, a regenerated corpus sweeps ONLY its own
+  * (name, dir) slot, sibling names sharing a prefix are untouched (the
+  * r15 bug: `nng`'s sweep ate `nng_ins`'s entries), two corpus dirs
+  * coexist, a markerless leftover rebuilds, and racing publishers agree.
   */
 class ArtifactCacheSpec extends AnyFunSuite {
 
@@ -20,8 +21,8 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("hit on unchanged corpus; regeneration sweeps only the stale slot") {
     val dir = mkCorpus("a", "v1")
     var builds = 0
-    def build(): String = ArtifactCache.getOrBuild("actest", dir,
-      Seq("embeddings")) { p =>
+    def build(): String =
+      Artifacts.publish("actest", dir, Seq("embeddings"), "1") { p =>
       builds += 1
       Files.createDirectories(Paths.get(p))
       Files.write(Paths.get(p, "data.txt"), s"built$builds".getBytes("UTF-8"))
@@ -30,7 +31,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     val p2 = build()
     assert(p1 == p2 && builds == 1, "second call must hit the cache")
     // sibling name sharing the prefix must survive this slot's sweep
-    val sib = ArtifactCache.getOrBuild("actest_ins", dir, Seq("embeddings")) {
+    val sib = Artifacts.publish("actest_ins", dir, Seq("embeddings"), "1") {
       p =>
         Files.createDirectories(Paths.get(p))
         Files.write(Paths.get(p, "sib.txt"), "s".getBytes("UTF-8"))
@@ -40,7 +41,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     // fingerprints memoize per process — a fresh JVM would recompute; the
     // spec recomputes through a second dir with the regenerated bytes
     val dir2 = mkCorpus("a2", "v2")
-    val p3 = ArtifactCache.getOrBuild("actest", dir2, Seq("embeddings")) { p =>
+    val p3 = Artifacts.publish("actest", dir2, Seq("embeddings"), "1") { p =>
       builds += 1
       Files.createDirectories(Paths.get(p))
       Files.write(Paths.get(p, "data.txt"), s"built$builds".getBytes("UTF-8"))
@@ -57,7 +58,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     val dir = mkCorpus("v", "same")
     var builds = 0
     def build(version: String): String =
-      ArtifactCache.getOrBuild("actestver", dir, Seq("embeddings"), version) {
+      Artifacts.publish("actestver", dir, Seq("embeddings"), version) {
         p =>
           builds += 1
           Files.createDirectories(Paths.get(p))
@@ -75,7 +76,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("a throwing build deletes its temp instead of orphaning it") {
     val dir = mkCorpus("t", "boom")
     val boom = intercept[RuntimeException] {
-      ArtifactCache.getOrBuild("actestfail", dir, Seq("embeddings")) { p =>
+      Artifacts.publish("actestfail", dir, Seq("embeddings"), "1") { p =>
         Files.createDirectories(Paths.get(p))
         throw new RuntimeException("builder exploded")
       }
@@ -87,7 +88,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
         f.getName.contains("actestfail"))
     assert(leftover.isEmpty, s"orphaned tmp dirs: ${leftover.mkString(",")}")
     // and the failure is not cached: a later good build succeeds
-    val p = ArtifactCache.getOrBuild("actestfail", dir, Seq("embeddings")) {
+    val p = Artifacts.publish("actestfail", dir, Seq("embeddings"), "1") {
       p =>
         Files.createDirectories(Paths.get(p))
         Files.write(Paths.get(p, "ok.txt"), "ok".getBytes("UTF-8"))
@@ -98,10 +99,62 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("fingerprint tracks content, not path metadata") {
     val d1 = mkCorpus("f1", "same-bytes")
     val d2 = mkCorpus("f2", "same-bytes")
-    assert(ArtifactCache.fingerprint(d1, Seq("embeddings")) ==
-      ArtifactCache.fingerprint(d2, Seq("embeddings")))
+    assert(Artifacts.fingerprint(d1, Seq("embeddings")) ==
+      Artifacts.fingerprint(d2, Seq("embeddings")))
     val d3 = mkCorpus("f3", "other-bytes")
-    assert(ArtifactCache.fingerprint(d1, Seq("embeddings")) !=
-      ArtifactCache.fingerprint(d3, Seq("embeddings")))
+    assert(Artifacts.fingerprint(d1, Seq("embeddings")) !=
+      Artifacts.fingerprint(d3, Seq("embeddings")))
+  }
+
+  private def leftoverTmps(name: String): Seq[java.io.File] =
+    Option(Paths.get("target", "graft_artifact_cache").toFile.listFiles())
+      .toSeq.flatten
+      .filter(f => f.getName.startsWith(".tmp_") && f.getName.contains(name))
+
+  test("a markerless entry left by an interrupted delete is rebuilt") {
+    val dir = mkCorpus("m", "partial")
+    var builds = 0
+    def build(): String =
+      Artifacts.publish("actestpartial", dir, Seq("embeddings"), "1") { p =>
+        builds += 1
+        Files.createDirectories(Paths.get(p))
+        Files.write(Paths.get(p, "data.txt"), s"built$builds".getBytes("UTF-8"))
+      }
+    val p1 = build()
+    // what a killed recursive delete leaves: data files, no marker
+    Files.delete(Paths.get(p1, "_GRAFT_COMPLETE"))
+    assert(Files.exists(Paths.get(p1, "data.txt")))
+    val p2 = build()
+    assert(p2 == p1 && builds == 2, "a markerless entry must rebuild, not fail")
+    assert(Files.exists(Paths.get(p2, "_GRAFT_COMPLETE")))
+    assert(Files.readString(Paths.get(p2, "data.txt")) == "built2")
+    assert(build() == p2 && builds == 2, "the rebuilt entry is a hit")
+  }
+
+  test("two racing publishers share one complete entry and leave no temp") {
+    val dir = mkCorpus("r", "race")
+    val inBuild = new java.util.concurrent.CountDownLatch(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = (1 to 2).map { i =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String =
+            Artifacts.publish("actestrace", dir, Seq("embeddings"), "1") { p =>
+              // both builds are in flight before either publishes
+              inBuild.countDown()
+              inBuild.await(30, java.util.concurrent.TimeUnit.SECONDS)
+              Files.createDirectories(Paths.get(p))
+              Files.write(Paths.get(p, "data.txt"), s"t$i".getBytes("UTF-8"))
+            }
+        })
+      }
+      val paths = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(inBuild.getCount == 0, "both publishers must have built")
+      assert(paths.distinct.size == 1, paths)
+      assert(Files.exists(Paths.get(paths.head, "_GRAFT_COMPLETE")))
+      assert(Files.exists(Paths.get(paths.head, "data.txt")))
+      val left = leftoverTmps("actestrace")
+      assert(left.isEmpty, s"temp dirs left behind: ${left.mkString(",")}")
+    } finally pool.shutdownNow()
   }
 }

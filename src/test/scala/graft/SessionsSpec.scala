@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The harness session's settings ([[Sessions.settings]], what
-  * [[Sessions.local]] applies): scratch dirs the cleanup can reach, and
-  * UTC, whatever the JVM's default zone.
+  * [[Sessions.local]] applies): scratch dirs the cleanup can reach, UTC,
+  * whatever the JVM's default zone, and WARN logging from the start.
   */
 class SessionsSpec extends AnyFunSuite {
 
@@ -27,5 +27,9 @@ class SessionsSpec extends AnyFunSuite {
     assert(conf("spark.sql.session.timeZone") == "UTC")
     assert(conf("spark.master") == "local[4]")
     assert(conf("spark.sql.shuffle.partitions") == "4")
+  }
+
+  test("logging starts at WARN: the level is a setting, not a call after start") {
+    assert(conf("spark.log.level") == "WARN")
   }
 }
