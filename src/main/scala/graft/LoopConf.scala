@@ -40,16 +40,8 @@ object LoopConf {
     math.max(4L, math.min(cores.toLong * 8, stateRows / 100000 + 1)).toInt
   }
 
-  /** Deployment hygiene + A/B lever: SPARK_GRAFT_LOOPCONF=0 turns the
-    * scoped override into a no-op (the loop then runs the session's
-    * own AQE/partition settings).
-    */
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_LOOPCONF").contains("0")
-
   def tight[A](s: SparkSession, stateRows: Long)(body: => A): A =
-    if (!enabled) body
-    else Confs.withConf(s,
+    Confs.withConf(s,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> width(s, stateRows).toString)(body)
 }

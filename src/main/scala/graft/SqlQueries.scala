@@ -98,8 +98,8 @@ object SqlQueries {
 
   /** The native expression surface under the SQL parser: grapheme_count,
     * codepoints, nfc_normalize, and rolling_hash64 resolving from
-    * SQL text (the [[graft.functions.Registry]] triples — identical to
-    * what GraftExtensions injects at session build).
+    * SQL text (the [[graft.functions.Registry]] triples, the same
+    * registration [[graft.Tables]] runs on every session).
     */
   val sqlNativeFns: Q = (s, _) => {
     import s.implicits._
@@ -146,8 +146,8 @@ object SqlQueries {
     * the shared hash gate.
     */
   val sqlDedupMinhash: Q = (s, dir) => {
-    val (k, bands, r, cap) = (graft.Tuning.minhashK, graft.Tuning.minhashBands,
-      graft.Tuning.minhashR, graft.Tuning.lshBandCap)
+    import graft.text.DedupQueries.{K => k, R => r}
+    val cap = graft.text.NearDup.LshBandCap
     graft.functions.Registry.registerAll(s)
     // same +10000 planted-variant scheme as the DSL twin — same loud
     // corpus-drift guard (collisions would be green-but-wrong in BOTH

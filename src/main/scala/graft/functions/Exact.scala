@@ -27,12 +27,6 @@ object Exact {
     */
   def davg(c: Column): Column = sum(c.cast(Dec)).cast("double") / count(lit(1))
 
-  /** Exact sum of a per-row product. The row-level double multiply is a
-    * single IEEE op (deterministic everywhere); only the summation needs the
-    * decimal detour.
-    */
-  def dsumProduct(a: Column, b: Column): Column = dsum(a * b)
-
   /** Loud decimal→int64 narrowing. With `spark.sql.ansi.enabled` off (this
     * engine's configuration) `cast(dec as long)` returns NULL on overflow
     * silently, which would surface as a confusing oracle hash/type mismatch

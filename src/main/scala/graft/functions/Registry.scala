@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 
 /** One-stop imperative registration of the engine's custom expression
-  * surface (the `SparkSessionExtensions` path in [[GraftExtensions]] is
-  * the deployment-grade alternative; this covers ad-hoc sessions).
+  * surface — the one registration path: [[graft.Tables]] calls
+  * [[registerAll]] on every session before a table is read.
   * Registration is idempotent — re-registering replaces the same entry.
   */
 object Registry {

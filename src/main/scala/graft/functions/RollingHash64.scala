@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -85,23 +84,4 @@ object RollingHash64 {
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(range(1, length($e) + 1), i -> CAST(ord(substr($e, i, 1)) AS BIGINT))), " +
       s"(a, b) -> (a * 31 + b) % 2147483647)"
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
-  * custom function surface at session build time — the deployment-grade
-  * alternative to imperative registration.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // same (ident, info, builder) triples the imperative Registry uses
-    ext.injectFunction((RollingHash64.ident, RollingHash64.info, RollingHash64.builder))
-    ext.injectFunction((MinHashMd5.ident, MinHashMd5.info, MinHashMd5.builder))
-    ext.injectFunction((SignBits.ident, SignBits.info, SignBits.builder))
-    ext.injectFunction((DotExactDec.ident, DotExactDec.info, DotExactDec.builder))
-    ext.injectFunction((DotDouble.ident, DotDouble.info, DotDouble.builder))
-    ext.injectFunction((WordShingles.ident, WordShingles.info, WordShingles.builder))
-    ext.injectFunction((GraphemeCount.ident, GraphemeCount.info, GraphemeCount.builder))
-    ext.injectFunction((Codepoints.ident, Codepoints.info, Codepoints.builder))
-    ext.injectFunction((NfcNormalize.ident, NfcNormalize.info, NfcNormalize.builder))
-  }
 }

@@ -1655,14 +1655,6 @@ object CurationQueries {
       rounds: Int): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_BFS_DEBUG")
-    def t0 = System.nanoTime()
-    var t = t0
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[frontierBfs] $tag ${(now - t) / 1e9}%.3f s")
-      t = now
-    }
     val lmDf = sources.toDF("src_node", "lm")
     var frontier = docs
       .join(broadcast(lmDf), $"doc_id" === $"src_node")
@@ -1670,7 +1662,6 @@ object CurationQueries {
       .localCheckpoint(true)
     var leaves = List(frontier)
     var done = frontier.isEmpty
-    lap("init")
     // b=2 per checkpoint, AQE ON: both re-measured r14 on the frontier
     // shape — b=4 was a wash (analysis of the 2^b-inlined anti-join
     // chain eats the saved jobs, the r10 dense-relax null again) and
@@ -1696,11 +1687,9 @@ object CurationQueries {
         fr = nx
       }
       val newly = acc.localCheckpoint(true)
-      lap(s"batch r=$r cp")
       leaves ::= newly
       frontier = newly.filter($"d" === lit(r + b.toLong))
       done = frontier.isEmpty
-      lap(s"batch r=$r isEmpty")
       r += b
     }
     leaves.reduce(_ unionByName _)

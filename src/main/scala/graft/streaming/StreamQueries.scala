@@ -140,7 +140,19 @@ object StreamQueries {
     (s"$root/out", s"$root/ck")
   }
 
-  /** Run a streaming query with [[graft.Tuning.streamStatePartitions]]
+  /** State-store partitions for the oracle-gated streaming queries.
+    * Every stateful operator runs one state store per shuffle partition
+    * per micro-batch, each paying open/commit file IO — at the gate
+    * corpus's row counts that overhead dwarfs the data (measured: a
+    * 4-batch stream-stream join spent ~70 task-seconds per batch across
+    * 32 partitions on state machinery). Size this to throughput × key
+    * cardinality in production; 4 is ample for the gate (measured r9:
+    * 8 → 4 cut the 13-gate stream subtotal ~15% with identical hashes —
+    * the stores are commit-bound, not compute-bound, at gate scale).
+    */
+  private val StatePartitions = 4
+
+  /** Run a streaming query with [[StatePartitions]]
     * state partitions (fresh checkpoints pin partitioning at first run,
     * so the setting takes effect per gate invocation), restoring the
     * session's batch settings afterwards.
@@ -162,8 +174,7 @@ object StreamQueries {
   private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession)
                                     (body: => A): A =
     graft.Confs.withConf(s,
-      "spark.sql.shuffle.partitions" ->
-        graft.Tuning.streamStatePartitions.toString,
+      "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
       "spark.sql.streaming.minBatchesToRetain" -> "2")(body)
 

@@ -18,9 +18,19 @@ import NearDup._
 object DedupQueries {
   import Queries.Q
 
-  private val K = graft.Tuning.minhashK         // minhash permutations
-  private val Bands = graft.Tuning.minhashBands // LSH bands (AND-amplified)
-  private val R = graft.Tuning.minhashR         // hashes per band
+  /** MinHash LSH shape, shared with the `sql_dedup_minhash` twin in
+    * [[graft.SqlQueries]]. Sizing rule of thumb for banded LSH at a
+    * different corpus size n: with background per-bit agreement p₀,
+    * candidate pairs ≈ b·(n²/2)·p₀^r — pick r ≈
+    * log_{1/p₀}(b·n²/(2·target_candidates)) (r grows with log n), then
+    * pick b so twin recall 1-(1-p₁^r)^b hits the target for the
+    * similarity floor p₁ you must not miss. The signature width the
+    * native expressions take is b·r, so these constants fully determine
+    * the plan — same shape at 10⁴ or 10¹⁰ rows, only the constants move.
+    */
+  private[graft] val K = 8     // minhash permutations
+  private val Bands = 4        // LSH bands (AND-amplified)
+  private[graft] val R = 2     // hashes per band
 
   /** MinHash + LSH near-dup pairs: originals vs copies with the last 5
     * words dropped; recovered pairs verified by exact shingle Jaccard.
@@ -160,7 +170,14 @@ object DedupQueries {
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** Per-document 64-bit SimHash signatures + 16-bit band keys (the
-    * bucketing keys a banded hamming-dedup would shuffle on).
+    * bucketing keys a banded hamming-dedup would shuffle on). Pair
+    * recovery over these bands is not a gate: on this synthetic corpus
+    * the shared ~30-word vocabulary makes unrelated documents'
+    * majority-vote signatures nearly collide — at sf0.1 the 16-bit band
+    * buckets go quadratic (measured 3.8M pairs / 350 s), SimHash's
+    * documented failure mode on low-diversity corpora. MinHash+LSH (r=2
+    * banding, `dedup_minhash_lsh`) is the banded pair join that stays
+    * selective here.
     */
   val simhashSig: Q = (s, dir) => {
     import s.implicits._
@@ -184,70 +201,6 @@ object DedupQueries {
        |  $bandCols
        |FROM sig ORDER BY doc_id""".stripMargin
   }
-
-  /** SimHash near-dup PAIR recovery (NOT registered as a gated query):
-    * on this synthetic corpus the shared ~30-word vocabulary makes
-    * unrelated documents' majority-vote signatures nearly collide — at
-    * sf0.1 the 16-bit band buckets go quadratic (measured 3.8M pairs /
-    * 350 s), which is SimHash's documented failure mode on low-diversity
-    * corpora, not an implementation bug. MinHash+LSH (r=2 banding,
-    * `dedup_minhash_lsh`) is the banded pair join that stays selective
-    * here; SimHash signatures/bands (`dedup_simhash_sig`) remain gated.
-    * Kept as API + unit-tested building blocks for corpora with real
-    * signature spread.
-    */
-  val simhashPairs: Q = (s, dir) => {
-    import s.implicits._
-    val corpus = Tables(s, dir, "documents")
-      .select($"doc_id", TextAnalysis.tokensOnce($"text").as("toks"))
-      .filter(size($"toks") >= 2)
-      .select(explode(array(
-        struct($"doc_id", array_join($"toks", " ").as("norm")),
-        struct(($"doc_id" + 10000).as("doc_id"),
-          concat(array_join(slice($"toks", lit(1), size($"toks") - 1), " "),
-            lit(" zzz")).as("norm")))).as("r"))
-      .select($"r.doc_id", $"r.norm")
-    val sigs = graft.CacheTracker.persistTracked(corpus
-      .select($"doc_id", expr(tokenHashesExpr(sparkDialect, "norm")).as("hs"))
-      .select($"doc_id", expr(simhashExpr(sparkDialect, "hs", "size(hs)")).as("simhash")))
-    val bands = sigs.select($"doc_id", $"simhash",
-        posexplode(transform(sequence(lit(0), lit(3)),
-          b => $"simhash".substr(b * 16 + 1, lit(16)))))
-      .toDF("doc_id", "simhash", "band", "mh")
-    val hamming = size(filter(sequence(lit(1), lit(64)),
-      i => $"a.simhash".substr(i, lit(1)) =!= $"b.simhash".substr(i, lit(1))))
-    bands.alias("a").join(bands.alias("b"), Seq("band", "mh"))
-      .where($"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter($"hamming" <= 10)
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  val simhashPairsSql: String =
-    s"""WITH docs AS (
-       |  SELECT doc_id, ${TextAnalysis.sqlTokens("text")} AS toks FROM documents),
-       |base AS (SELECT * FROM docs WHERE len(toks) >= 2),
-       |corpus AS (
-       |  SELECT doc_id, array_to_string(toks, ' ') AS norm FROM base
-       |  UNION ALL
-       |  SELECT doc_id + 10000,
-       |    array_to_string(list_slice(toks, 1, len(toks) - 1), ' ') || ' zzz'
-       |  FROM base),
-       |h AS (SELECT doc_id, ${tokenHashesExpr(duckDialect, "norm")} AS hs FROM corpus),
-       |sigs AS (SELECT doc_id, ${simhashExpr(duckDialect, "hs", "len(hs)")} AS simhash FROM h),
-       |bands AS (
-       |  SELECT doc_id, simhash, b AS band, substr(simhash, b * 16 + 1, 16) AS mh
-       |  FROM sigs CROSS JOIN range(0, 4) t(b)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |    CAST(len(list_filter(range(1, 65),
-       |      i -> substr(a.simhash, i, 1) <> substr(b.simhash, i, 1))) AS INT) AS hamming
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.mh = b.mh
-       |  WHERE a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b, hamming FROM cand
-       |WHERE hamming <= 10 ORDER BY doc_a, doc_b""".stripMargin
 
   /** MinHash as an ESTIMATOR, not just a bucketing key: for each
     * (original, truncated-copy) pair, the fraction of agreeing minhash
@@ -738,7 +691,7 @@ object DedupQueries {
     * one boilerplate string (the same-header/footer failure mode that
     * makes a (band, key) group quadratic at corpus scale). All clones
     * collapse onto ONE key in EVERY band, blowing past
-    * [[graft.Tuning.lshBandCap]]; the gate reports, per band, the group
+    * [[NearDup.LshBandCap]]; the gate reports, per band, the group
     * count, how many groups overflowed and how many docs they held (the
     * rows the guard drops), and the post-cap candidate-pair bound
     * Σ g·(g-1)/2 over surviving groups — the boundedness certificate:
@@ -753,7 +706,7 @@ object DedupQueries {
 
   val lshHotBand: Q = (s, dir) => {
     import s.implicits._
-    val cap = graft.Tuning.lshBandCap
+    val cap = LshBandCap
     val corpus = shingledCorpus(s, dir).unionByName(
       s.range(0, BoilerClones).select(($"id" + 50000).as("doc_id"),
         wordShingles(split(lit(BoilerWords), " "), 3).as("sh")))
@@ -771,7 +724,7 @@ object DedupQueries {
   }
 
   val lshHotBandSql: String = {
-    val cap = graft.Tuning.lshBandCap
+    val cap = LshBandCap
     s"""WITH docs AS (
        |  SELECT doc_id, ${TextAnalysis.sqlTokens("text")} AS toks FROM documents),
        |base AS (SELECT * FROM docs WHERE len(toks) >= 15),

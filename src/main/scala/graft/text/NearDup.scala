@@ -20,6 +20,22 @@ import org.apache.spark.sql.functions._
   */
 object NearDup {
 
+  /** Hot-band overflow cap for MinHash LSH: a (band, key) group larger
+    * than this is dropped from candidate generation instead of joined.
+    * A boilerplate-heavy corpus (the same header/footer on millions of
+    * docs) collapses those docs onto ONE band key, and the candidate
+    * self-join goes quadratic in the group size — one hot group of g
+    * docs is g·(g-1)/2 pairs, unbounded by any of the banding math.
+    * Groups at the cap are near-certain exact duplicates of each other
+    * (all r hashes agree in EVERY band they collide in), which is the
+    * exact-dedup fingerprint gate's job, not near-dup's — dropping them
+    * loses nothing the pipeline doesn't already catch, and keeps
+    * per-band candidates ≤ n_groups·cap·(cap-1)/2. Size to the largest
+    * legitimate near-dup cluster you expect (32 ≫ the gate corpus's max
+    * group of 3).
+    */
+  val LshBandCap = 32
+
   /** Distinct n-word shingles of a token array — the native
     * [[graft.functions.WordShingles]] expression (registered
     * session-wide by [[graft.Tables]]); value-identical to
@@ -140,13 +156,13 @@ object NearDup {
     * Hot-band guard: (band, mh) groups larger than `cap` are dropped
     * BEFORE the self-join — one hot group (boilerplate text collapsing
     * onto a single key) is otherwise g·(g-1)/2 pairs, the one quadratic
-    * escape hatch in the banding plan (see [[graft.Tuning.lshBandCap]]
+    * escape hatch in the banding plan (see [[LshBandCap]]
     * for why dropping loses nothing near-dup cares about). The group
     * count is a window over the SAME (band, mh) key the join shuffles
     * on, so the guard rides the join's exchange instead of adding one.
     */
   def lshCandidates(bands: DataFrame, idCol: String): DataFrame =
-    lshCandidates(bands, idCol, graft.Tuning.lshBandCap)
+    lshCandidates(bands, idCol, LshBandCap)
 
   def lshCandidates(bands: DataFrame, idCol: String, cap: Int): DataFrame = {
     val sized = bands
@@ -167,7 +183,7 @@ object NearDup {
     * sides land in the same (band, mh) group.
     */
   def sqlCappedCand(idCol: String,
-      cap: Int = graft.Tuning.lshBandCap): String =
+      cap: Int = LshBandCap): String =
     s"""sized AS (
        |  SELECT $idCol, band, mh,
        |    COUNT(*) OVER (PARTITION BY band, mh) AS gsz FROM bands),

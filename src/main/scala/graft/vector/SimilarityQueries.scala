@@ -47,8 +47,8 @@ object SimilarityQueries {
     * is 0.984²⁴ ≈ 0.68 and 4 bands put twin recall at
     * 1-(1-0.68)⁴ ≈ 0.99.
     */
-  private val NdB = graft.Tuning.ndBands // near-dup bands
-  private val NdR = graft.Tuning.ndR     // bits per near-dup band
+  private val NdB = 4  // near-dup bands
+  private val NdR = 24 // bits per near-dup band
   private val NdH = NdB * NdR
 
   /** ANN probes lower-similarity neighbors (bit agreement ~0.67), so it
@@ -57,8 +57,8 @@ object SimilarityQueries {
     * layout at the same join cost (the query side is 5 rows; candidate
     * work is b·q·n/2^r, linear in n).
     */
-  private val AnnB = graft.Tuning.annBands
-  private val AnnR = graft.Tuning.annR
+  private val AnnB = 3
+  private val AnnR = 6
 
   /** Product-quantization shape: 64 dims as [[PqM]] subspaces of
     * [[PqSub]] dims, seeded with [[PqG]] sub-clusters per label
@@ -126,9 +126,9 @@ object SimilarityQueries {
     */
   val annLsh: Q = annLshWith(AnnB, AnnR)
 
-  /** [[annLsh]] at explicit (bands, bits-per-band) — the deployment knob
-    * ([[graft.Tuning]]); the gate runs the defaults, BandingSpec runs a
-    * non-default shape to prove the parameterization is live.
+  /** [[annLsh]] at explicit (bands, bits-per-band); the gate runs
+    * [[AnnB]]/[[AnnR]], BandingSpec runs a non-default shape to prove
+    * the parameterization is live.
     */
   def annLshWith(annB: Int, annR: Int): Q = (s, dir) => {
     import s.implicits._
@@ -495,7 +495,7 @@ object SimilarityQueries {
        |LEFT JOIN bordercl br ON corpus.vec_id = br.node
        |ORDER BY corpus.vec_id""".stripMargin
 
-  /** IVF coarse quantizer constants (env-overridable via [[graft.Tuning]]):
+  /** IVF coarse quantizer constants:
     * [[IvfProbes]] cells probed per query, [[IvfLloyd]] k-means rounds,
     * [[IvfReplicas]] cells each corpus vector is indexed under.
     *
@@ -512,9 +512,9 @@ object SimilarityQueries {
     * is probed. Measured recall@p=4: 0.92 at sf0.001 AND sf0.01
     * (AnnRecallSpec pins the floor).
     */
-  private val IvfProbes = graft.Tuning.ivfProbes
-  private val IvfLloyd = graft.Tuning.ivfLloyd
-  private val IvfReplicas = graft.Tuning.ivfReplicas
+  private val IvfProbes = 4 // reads ~replicas·probes/k of the corpus
+  private val IvfLloyd = 2
+  private[graft] val IvfReplicas = 2
 
   /** Lloyd-train the coarse quantizer: seed cells are label means, then
     * [[IvfLloyd]] rounds of exact-decimal assign + re-average — the same
@@ -1697,15 +1697,25 @@ object SimilarityQueries {
        |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
   }
 
+  /** IVF-PQ composed read path: ADC shortlist depth per query before the
+    * exact rescore (FAISS's `k_factor·k` rerank budget; k_factor=10 for
+    * the gate's top-5). Sized by a measured sweep on the gate corpus:
+    * the compressed-domain ranking error must stay inside the shortlist,
+    * and composed recall@5 vs exact was 0.76 at depth 25, 0.80 at 40,
+    * ≥0.88 at 50 — the spec floor (0.85) sits under the 50 measurement,
+    * with IVF probing alone at 0.92 as the ceiling.
+    */
+  private val IvfpqRerank = 50
+
   /** IVF-PQ composed index read path — the FAISS-IVFPQ layout every
     * production 100 TB vector store actually runs, composing the two
     * halves the surface already gates separately: (1) coarse-probe the
-    * [[graft.Tuning.ivfProbes]] highest-cosine Lloyd-trained cells
+    * [[IvfProbes]] highest-cosine Lloyd-trained cells
     * ([[ivfStructure]]) and collect ONLY the vectors indexed there
     * (replicated assignment); (2) ADC-score just those candidates'
     * [[PqM]]-byte PQ codes against the query LUT — never a full-vector
     * kernel at scan scale; (3) exact-rescore the compressed-domain
-    * top-[[graft.Tuning.ivfpqRerank]] with full vectors and return the
+    * top-[[IvfpqRerank]] with full vectors and return the
     * top-5. `sim_ivf_search` rescores every probed vector with full
     * vectors; `sim_pq_adc_knn` ADC-scans the whole corpus's codes; this
     * gate applies BOTH prunings at once, which is what survives at
@@ -1741,7 +1751,7 @@ object SimilarityQueries {
       .groupBy($"q_id", $"vec_id")
       .agg(dsum($"dp").as("pq_dot"))
       .withColumn("srn", row_number().over(wAdc))
-      .filter($"srn" <= graft.Tuning.ivfpqRerank)
+      .filter($"srn" <= IvfpqRerank)
       .select($"q_id", $"vec_id")
     val q = vectors.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"xn".as("qxn"))
@@ -1780,7 +1790,7 @@ object SimilarityQueries {
        |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
        |      ORDER BY pq_dot DESC, vec_id) AS srn
        |    FROM adc)
-       |  WHERE srn <= ${graft.Tuning.ivfpqRerank}),
+       |  WHERE srn <= $IvfpqRerank),
        |rescored AS (
        |  SELECT sl.q_id, sl.vec_id,
        |    ${sqlCosine("e.embedding", "qe.embedding")} AS cosine
@@ -1882,7 +1892,7 @@ object SimilarityQueries {
       .join(broadcast(qc), Seq("q_id", "h"))
       .withColumn("score", $"qc" + $"adcsum")
       .withColumn("srn", row_number().over(wAdc))
-      .filter($"srn" <= graft.Tuning.ivfpqRerank)
+      .filter($"srn" <= IvfpqRerank)
       .select($"q_id", $"vec_id")
     val q = vectors.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"xn".as("qxn"))
@@ -1946,7 +1956,7 @@ object SimilarityQueries {
        |    SELECT a.q_id, a.vec_id, row_number() OVER (PARTITION BY a.q_id
        |      ORDER BY (q.qc + a.adcsum) DESC, a.vec_id) AS srn
        |    FROM adcr a JOIN qc q ON a.q_id = q.q_id AND a.h = q.h)
-       |  WHERE srn <= ${graft.Tuning.ivfpqRerank}),
+       |  WHERE srn <= $IvfpqRerank),
        |rescored AS (
        |  SELECT sl.q_id, sl.vec_id,
        |    ${sqlCosine("e.embedding", "qe.embedding")} AS cosine
@@ -2336,7 +2346,7 @@ object SimilarityQueries {
     * Scale shape: cluster count k is the parallelism and sets the
     * EXPECTED per-cell pair work (n²/k across all cells; k=10 on the
     * gate corpus ⇒ ~800k screened pairs at sf0.1, ~2k paying the exact
-    * kernel — every cell is under [[graft.Tuning.semCellCap]], so the
+    * kernel — every cell is under [[SemCellCap]], so the
     * window is the identity here). A production run sizes k ∝ n
     * (SemDeDup used 50k clusters for 100M+ docs) so per-cell membership
     * stays constant as the corpus grows — but that only bounds the
@@ -2404,6 +2414,27 @@ object SimilarityQueries {
       .filter($"rb" > $"ra" && $"rb" <= $"ra" + cap)
   }
 
+  /** Hot-cell pair window for semantic dedup: within each k-means cell,
+    * members are ranked by exact distance-to-centroid and only pairs
+    * within this many RANKS of each other are screened (the classic
+    * sorted-neighborhood blocking key — near-dup twins sit at
+    * near-identical distance to their cell's centroid, so they are
+    * rank-adjacent by construction). For a cell at or under the window
+    * this is EXACTLY the all-pairs screen (every pair is within the
+    * window); past it, candidates are hard-bounded at 2·|cell|·window —
+    * the [[graft.text.NearDup.LshBandCap]] analogue for the
+    * embedding-space dedup layer, closing the |cell|²/2 blow-up one
+    * skewed cell would otherwise cost (one dense boilerplate region at
+    * 100 TB ⇒ a cell with millions of members). The occupancy-scaled-k
+    * alternative (k ∝ n/target) only bounds the EXPECTED cell size; this
+    * bounds the worst case. Size to the largest cluster whose internal
+    * pairs you must rank exhaustively (512 ≫ the ~400-member cells the
+    * sf0.1 gate produces, so the `dedup_semantic` gate runs the
+    * all-pairs-identical regime; the planted hot-cell gate pins the
+    * capped regime at an explicit window of 64).
+    */
+  private val SemCellCap = 512
+
   /** The SemDeDup core over any (vec_id, v, fn, xn) corpus against a
     * trained centroid table: exact-decimal cell assignment, a
     * sorted-neighborhood pair screen INSIDE each cell ([[semRanked]] +
@@ -2418,7 +2449,7 @@ object SimilarityQueries {
   private[graft] def semanticDedupOn(
       corpus0: org.apache.spark.sql.DataFrame,
       centroidArr: org.apache.spark.sql.DataFrame,
-      cap: Int = graft.Tuning.semCellCap):
+      cap: Int = SemCellCap):
       org.apache.spark.sql.DataFrame = {
     val s = corpus0.sparkSession
     import s.implicits._
@@ -2527,10 +2558,10 @@ object SimilarityQueries {
        |    d -> CASE WHEN d = 1 THEN CAST(embedding[d] AS DOUBLE) + 0.05
        |         ELSE CAST(embedding[d] AS DOUBLE) END)
        |  FROM embeddings),
-       |${sqlSemChain(graft.Tuning.semCellCap)}""".stripMargin
+       |${sqlSemChain(SemCellCap)}""".stripMargin
 
   /** Rank window for the planted-hot-cell gate: far under the
-    * production [[graft.Tuning.semCellCap]] so the CAPPED regime is
+    * production [[SemCellCap]] so the CAPPED regime is
     * what the hash pins (the planted colinear run spans ~2× this many
     * ranks, so an oracle without the window would canonicalize the run
     * differently — the cap is IN the hash, not just asserted).

@@ -80,10 +80,6 @@ object VectorOps {
     s"list_sum(list_transform(list_zip($a, $b), " +
       s"z -> CAST(struct_extract(z, 1) AS DOUBLE) * CAST(struct_extract(z, 2) AS DOUBLE)))"
 
-  /** DuckDB double cosine mirror of [[cosineFast]] — screening only. */
-  def sqlCosineFast(a: String, b: String): String =
-    s"(${sqlDotFast(a, b)} / (sqrt(${sqlDotFast(a, a)}) * sqrt(${sqlDotFast(b, b)})))"
-
   /** DuckDB mirror of [[dotExact]] (list_sum over DECIMAL is exact). */
   def sqlDotExact(a: String, b: String): String =
     s"CAST(list_sum(list_transform(list_zip($a, $b), " +
@@ -139,17 +135,6 @@ object VectorOps {
        |          CAST(j * 1000 + d AS VARCHAR)), 1, 4)) AS INTEGER) % 97) - 48 AS w
        |      FROM range(0, $h) t(j) CROSS JOIN range(1, 65) u(d))
        |    GROUP BY j))""".stripMargin
-
-  /** DuckDB mirror of [[signBucket]] (1-based dims via range); requires
-    * [[sqlSignWeightsCte]]'s `wm` in scope.
-    */
-  def sqlSignBucket(v: String, h: Int): String = {
-    val w = "(CAST(wm[j+1][d] AS DOUBLE) / CAST(48.0 AS DOUBLE))"
-    val proj = s"list_sum(list_transform(range(1, 65), " +
-      s"d -> CAST($w * CAST($v[d] AS DOUBLE) AS DECIMAL(30,15))))"
-    s"array_to_string(list_transform(range(0, $h), " +
-      s"j -> CASE WHEN $proj >= 0 THEN '1' ELSE '0' END), '')"
-  }
 
   /** DuckDB mirror of the native [[graft.functions.SignBits]] expression
     * (64-dim, 1-based dims): pure BIGINT arithmetic — fixed-point inputs

@@ -9,14 +9,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * (name, dir) slot, sibling names sharing a prefix are untouched (the
   * r15 bug: `nng`'s sweep ate `nng_ins`'s entries), two corpus dirs
   * coexist, a markerless leftover rebuilds, and racing publishers agree.
+  * Each test deletes its temp corpora and every entry published against
+  * them, so a run leaves no `actest*` slot in the shared cache.
   */
 class ArtifactCacheSpec extends AnyFunSuite {
+
+  private val corpora = scala.collection.mutable.Buffer.empty[String]
 
   private def mkCorpus(tag: String, content: String): String = {
     val d = Files.createTempDirectory(s"graft_ac_$tag")
     Files.write(d.resolve("embeddings.parquet"), content.getBytes("UTF-8"))
+    corpora += d.toString
     d.toString
   }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      corpora.foreach { dir =>
+        val dirKey = dir.replaceAll("[^A-Za-z0-9]", "").takeRight(12)
+        Option(Paths.get("target", "graft_artifact_cache").toFile.listFiles())
+          .toSeq.flatten.filter(_.getName.contains(s"_${dirKey}_"))
+          .foreach(Scratch.deleteRecursively)
+        Scratch.deleteRecursively(new java.io.File(dir))
+      }
+      corpora.clear()
+    }
 
   test("hit on unchanged corpus; regeneration sweeps only the stale slot") {
     val dir = mkCorpus("a", "v1")

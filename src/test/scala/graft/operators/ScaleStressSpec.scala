@@ -636,7 +636,7 @@ class ScaleStressSpec extends SparkSpec {
         "doc_id").localCheckpoint(true)
     }
     val nCand = cand.count()
-    assert(nCand <= nDocs * 4L * graft.Tuning.lshBandCap,
+    assert(nCand <= nDocs * 4L * graft.text.NearDup.LshBandCap,
       s"candidates $nCand exceed the banding bound at $nDocs docs")
     val planted = cand.filter($"doc_b" === $"doc_a" + 20000000L)
       .localCheckpoint(true)

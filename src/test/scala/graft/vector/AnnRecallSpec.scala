@@ -85,7 +85,7 @@ class AnnRecallSpec extends SparkSpec {
     assert(rows.length == 10, "one row per trained cell")
     assert(rows.map(_._2).sum == n,
       "primary assignment must partition the corpus")
-    assert(rows.map(_._3).sum == graft.Tuning.ivfReplicas * n,
+    assert(rows.map(_._3).sum == SimilarityQueries.IvfReplicas * n,
       "replicated index must hold exactly replicas x corpus entries")
     rows.foreach { case (c, p, i, share) =>
       assert(i >= p, s"cell $c: replicated index can't be under primary")

@@ -12,7 +12,7 @@ import graft.SharedSpark
   * random valid (bands, bits/hashes-per-band) shapes the distributed
   * banded-LSH operators must agree with a sequential in-memory banding
   * model over the SAME signatures. BandingSpec exercises one non-default
-  * shape end-to-end; this pins every shape the [[graft.Tuning]] knobs
+  * shape end-to-end; this pins every shape the banding parameters
   * admit. (The DuckDB oracle gates the default shape each round; the
   * model here encodes the same semantics the oracle SQL implements.)
   */
@@ -42,7 +42,7 @@ object BandingProps extends Properties("lshBanding") {
       // id-ordered pairs sharing any band key — groups over the
       // production hot-band cap dropped, mirroring lshCandidates'
       // default path (short r makes large collision groups reachable)
-      val cap = graft.Tuning.lshBandCap
+      val cap = graft.text.NearDup.LshBandCap
       val expected = (0 until b).flatMap { band =>
         sigs.groupBy { case (_, mh) =>
           mh.slice(band * r, band * r + r).mkString("|")

@@ -4,8 +4,8 @@ import graft.SparkSpec
 
 /** Proves the LSH banding parameterization is live: the same query at a
   * NON-default (bands, bits-per-band) shape still produces exact-cosine
-  * results with nonzero recall — so a deployment can re-size the
-  * signature per corpus ([[graft.Tuning]]) without touching the plan.
+  * results with nonzero recall — so the signature can be re-sized per
+  * corpus without touching the plan.
   */
 class BandingSpec extends SparkSpec {
 
