@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.{Queries, RefQueries}
 import graft.model.Schemas
@@ -57,7 +59,7 @@ object StreamQueries {
     */
   private[streaming] val StageRowCap = 200 * 1000
 
-  private[streaming] def stageCsv(df: org.apache.spark.sql.DataFrame,
+  private[streaming] def stageCsv(df: DataFrame,
                                   inDir: String, name: String,
                                   cap: Int = StageRowCap): Boolean = {
     def plain(v: Any): Option[String] = v match {
@@ -100,15 +102,6 @@ object StreamQueries {
     ok
   }
 
-  /** Same corpus and same expected result as `ref_ingest_dedup`, but the
-    * rows travel as CSV files through a streaming query: two files (base
-    * batch seq=1, duplicate-key batch seq=2) land in a watched dir, the
-    * stream runs to completion with `Trigger.AvailableNow`, each
-    * micro-batch upserts into parquet, and the final read merges the
-    * accumulated batches. Because per-batch winners keep their data
-    * `seq`, the result is identical whether the source saw one batch or
-    * ten — the property that makes the plan replay-safe at scale.
-    */
   /** Staged-input dir memoized per (gate, sf dir): the staged CSV corpus
     * is pure input prep — a deterministic function of the read-only
     * testdata — so reruns in the same JVM (bench reps, Verify after the
@@ -147,7 +140,7 @@ object StreamQueries {
     * 4-batch stream-stream join spent ~70 task-seconds per batch across
     * 32 partitions on state machinery). Size this to throughput × key
     * cardinality in production; 4 is ample for the gate (measured r9:
-    * 8 → 4 cut the 13-gate stream subtotal ~15% with identical hashes —
+    * 8 → 4 cut the 14-gate stream subtotal ~15% with identical hashes —
     * the stores are commit-bound, not compute-bound, at gate scale).
     */
   private val StatePartitions = 4
@@ -171,13 +164,102 @@ object StreamQueries {
     * Together ≈10% off the subtotal; the remaining floor is per-batch
     * machinery that amortizes at production batch sizes.
     */
-  private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession)
+  private def withStatePartitions[A](s: SparkSession)
                                     (body: => A): A =
     graft.Confs.withConf(s,
       "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
       "spark.sql.streaming.minBatchesToRetain" -> "2")(body)
 
+  /** The file-stream source every gate reads its staged CSVs through:
+    * header row, explicit schema, one file per micro-batch (so the
+    * mtime-ordered files ARE the batch sequence).
+    */
+  private def csvStream(s: SparkSession, schema: String, in: String): DataFrame =
+    s.readStream
+      .schema(schema)
+      .option("header", "true")
+      .option("maxFilesPerTrigger", "1")
+      .csv(in)
+
+  /** Run `df` to completion into an append-mode parquet sink under
+    * [[withStatePartitions]]. `df` is by-name so the frame is built inside
+    * the conf scope.
+    */
+  private def runToParquet(s: SparkSession, df: => DataFrame,
+                           out: String, ck: String): Unit =
+    withStatePartitions(s)(df
+      .writeStream
+      .format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ck)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination())
+
+  /** Batches must be DISCOVERED in order: the file source sorts by
+    * modification time, and files staged driver-side ms apart can share
+    * one. Stamps each `(file, offsetMs)` at `base`'s mtime + offset;
+    * setLastModified reports failure via a boolean, so fail loudly rather
+    * than let a gate flake on a filesystem that ignores it.
+    */
+  private def stampAfter(base: String, later: (String, Long)*): Unit = {
+    val b = new java.io.File(base)
+    val t0 = b.lastModified()
+    require(later.forall { case (f, ms) => new java.io.File(f).setLastModified(t0 + ms) },
+      s"could not order staged batch files by mtime under ${b.getParent}")
+  }
+
+  private val DayUs = 86400L * 1000000
+
+  /** Each sentinel column's value; `event_id` and `us` are per sentinel. */
+  private val sentinelCells: Map[String, (DataType, (Long, Long) => Any)] = Map(
+    "event_id" -> ((LongType, (id, _) => id)),
+    "us" -> ((LongType, (_, us) => us)),
+    "user_id" -> ((LongType, (_, _) => -1L)),
+    "event_type" -> ((StringType, (_, _) => "__sentinel__")),
+    "value" -> ((DoubleType, (_, _) => 0.0)))
+
+  /** Stage `b1`, then the two sentinel batches the append-mode event-time
+    * gates need, and return `b1`'s max `us` (read back from the staged
+    * CSV instead of re-scanning the SF-scaling source a second time).
+    *
+    * Append mode only emits state once the watermark passes it, so a
+    * finite replay would otherwise hold its tail in state forever. TWO
+    * sentinel batches: `b2` (one day past the corpus, event_id -1)
+    * advances the watermark past every real window or session; `b3` (two
+    * days, event_id -2) forces one more micro-batch in which that
+    * advanced watermark actually EMITS the held state. Each sentinel is one row with `b1`'s columns in `b1`'s order:
+    * user -1 (so it sessionizes apart from real users), type
+    * `__sentinel__`, value 0.0. A column with no sentinel value fails.
+    */
+  private[streaming] def stageWithSentinels(s: SparkSession, in: String,
+                                            b1: DataFrame, csvSchema: String): Long = {
+    val unknown = b1.columns.filterNot(sentinelCells.contains)
+    require(unknown.isEmpty,
+      s"no sentinel value for column(s) ${unknown.mkString(", ")}")
+    stageCsv(b1, in, "b1")
+    val maxUs = s.read.schema(csvSchema).option("header", "true")
+      .csv(s"$in/b1.csv").agg(max(col("us"))).head().getLong(0)
+    val schema = StructType(b1.columns.map(c => StructField(c, sentinelCells(c)._1)))
+    for (k <- 1 to 2) {
+      val row = Row.fromSeq(b1.columns.toSeq.map(c => sentinelCells(c)._2(-k, maxUs + k * DayUs)))
+      stageCsv(s.createDataFrame(java.util.List.of(row), schema), in, s"b${k + 1}")
+    }
+    stampAfter(s"$in/b1.csv", s"$in/b2.csv" -> 10000L, s"$in/b3.csv" -> 20000L)
+    maxUs
+  }
+
+  /** Same corpus and same expected result as `ref_ingest_dedup`, but the
+    * rows travel as CSV files through a streaming query: two files (base
+    * batch seq=1, duplicate-key batch seq=2) land in a watched dir, the
+    * stream runs to completion with `Trigger.AvailableNow`, each
+    * micro-batch upserts into parquet, and the final read merges the
+    * accumulated batches. Because per-batch winners keep their data
+    * `seq`, the result is identical whether the source saw one batch or
+    * ten — the property that makes the plan replay-safe at scale.
+    */
   val streamIngestDedup: Q = (s, _) => {
     val (in, _) = stagedInputs("ingest", "gen") { in =>
       stageCsv(Gen.locations(s, 1000).withColumn("seq", lit(1L)), in, "b1")
@@ -213,42 +295,15 @@ object StreamQueries {
   val streamTumblingCounts: Q = (s, dir) => {
     import s.implicits._
     import graft.functions.Exact.dsum
+    val csvSchema = "event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE"
     val (in, _) = stagedInputs("tumbling", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
         .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"),
-          $"event_type", $"value")
-      stageCsv(ev, in, "b1")
-      // read the max back from the staged CSV instead of re-scanning the
-      // (SF-scaling) events parquet a second time
-      val maxUs = s.read
-        .schema("event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE")
-        .option("header", "true").csv(s"$in/b1.csv")
-        .agg(max($"us")).head().getLong(0)
-      // TWO sentinel batches: the first advances the watermark past every
-      // real window, the second forces one more micro-batch in which that
-      // advanced watermark actually EMITS the held state — AvailableNow
-      // terminates after the last file, without a trailing no-data batch
-      stageCsv(Seq((-1L, maxUs + 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b2")
-      stageCsv(Seq((-2L, maxUs + 2 * 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b3")
-      // batches must be DISCOVERED in order: the file source sorts by
-      // modification time, and setLastModified reports failure via a
-      // boolean — fail loudly rather than let the gate flake on a
-      // filesystem that ignores it
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          $"event_type", $"value"), csvSchema)
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema("event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE")
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s, csvSchema, in)
       // watermarks require TimestampType; the session is UTC, so the
       // final cast to NTZ restores the corpus's naive wall-clock for
       // the dump (comparator reads both engines' output tz-naive).
@@ -262,15 +317,7 @@ object StreamQueries {
       .groupBy(window($"ts", "10 minutes"), $"event_type")
       .agg(count(lit(1)).as("n"), dsum($"value").as("total_value"))
       .select($"window.start".cast("timestamp_ntz").as("w_start"),
-        $"event_type", $"n", $"total_value")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        $"event_type", $"n", $"total_value"), out, ck)
     s.read.parquet(out)
       .filter($"event_type" =!= "__sentinel__")
       .orderBy($"w_start", $"event_type")
@@ -297,42 +344,19 @@ object StreamQueries {
     import graft.functions.Exact.dsum
     val csvSchema = "event_id BIGINT, us BIGINT, value DOUBLE"
     val (in, maxUs) = stagedInputs("sliding", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
-        .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"), $"value")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, maxUs + 86400L * 1000000, 0.0))
-        .toDF("event_id", "us", "value"), in, "b2")
-      stageCsv(Seq((-2L, maxUs + 2 * 86400L * 1000000, 0.0))
-        .toDF("event_id", "us", "value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+        .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"),
+          $"value"), csvSchema)
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s, csvSchema, in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "10 minutes")
       .groupBy(window($"ts", "10 minutes", "5 minutes"))
       .agg(count(lit(1)).as("n"), dsum($"value").as("total_value"))
       .select($"window.start".cast("timestamp_ntz").as("w_start"),
-        $"n", $"total_value")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        $"n", $"total_value"), out, ck)
     s.read.parquet(out)
       .filter($"w_start" <= timestamp_micros(lit(maxUs)).cast("timestamp_ntz"))
       .orderBy($"w_start")
@@ -366,28 +390,12 @@ object StreamQueries {
     import s.implicits._
     val csvSchema = "event_id BIGINT, us BIGINT, event_type STRING"
     val (in, _) = stagedInputs("trending", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"),
-          $"event_type")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, maxUs + 86400L * 1000000, "__sentinel__"))
-        .toDF("event_id", "us", "event_type"), in, "b2")
-      stageCsv(Seq((-2L, maxUs + 2 * 86400L * 1000000, "__sentinel__"))
-        .toDF("event_id", "us", "event_type"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          $"event_type"), csvSchema)
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    withStatePartitions(s)(csvStream(s, csvSchema, in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "10 minutes")
       .groupBy(window($"ts", "1 hour"), $"event_type")
@@ -395,7 +403,7 @@ object StreamQueries {
       .select($"window.start".cast("timestamp_ntz").as("w_start"),
         $"event_type", $"n")
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("w_start")).orderBy(col("n").desc, col("event_type"))
         // idempotent under micro-batch RETRY: each batch owns its
@@ -423,7 +431,7 @@ object StreamQueries {
       }
       .option("checkpointLocation", ck)
       .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination())
     // only window-closing batches write, so a corpus whose windows never
@@ -465,29 +473,13 @@ object StreamQueries {
     import graft.functions.Exact.dsum
     val csvSchema = "event_id BIGINT, user_id BIGINT, us BIGINT, value DOUBLE"
     val (in, _) = stagedInputs("sessions", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
         .select($"event_id", $"user_id",
-          unix_micros($"ts".cast("timestamp")).as("us"), $"value")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, -1L, maxUs + 86400L * 1000000, 0.0))
-        .toDF("event_id", "user_id", "us", "value"), in, "b2")
-      stageCsv(Seq((-2L, -1L, maxUs + 2 * 86400L * 1000000, 0.0))
-        .toDF("event_id", "user_id", "us", "value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          unix_micros($"ts".cast("timestamp")).as("us"), $"value"), csvSchema)
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s, csvSchema, in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "30 minutes")
       .groupBy($"user_id", session_window($"ts", "30 minutes"))
@@ -496,15 +488,7 @@ object StreamQueries {
       .select($"user_id",
         $"ss".cast("timestamp_ntz").as("sess_start"),
         $"se".cast("timestamp_ntz").as("sess_end"),
-        $"n_events", $"total_value")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        $"n_events", $"total_value"), out, ck)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"sess_start")
     s.read.parquet(out)
@@ -561,46 +545,20 @@ object StreamQueries {
     import s.implicits._
     val csvSchema = "event_id BIGINT, user_id BIGINT, us BIGINT, value DOUBLE"
     val (in, _) = stagedInputs("customstate", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
         .select($"event_id", $"user_id",
           // ms-truncate in pure integer math (um − um mod 1000)
           (unix_micros($"ts".cast("timestamp")) -
             pmod(unix_micros($"ts".cast("timestamp")), lit(1000L))).as("us"),
-          $"value")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, -1L, maxUs + 86400L * 1000000, 0.0))
-        .toDF("event_id", "user_id", "us", "value"), in, "b2")
-      stageCsv(Seq((-2L, -1L, maxUs + 2 * 86400L * 1000000, 0.0))
-        .toDF("event_id", "user_id", "us", "value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          $"value"), csvSchema)
     }
     val (out, ck) = freshOutCk()
-    val events = s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
-      .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id",
-        lit("e").as("event_type"), $"value")
-      .as[Streams.Event]
-    withStatePartitions(s)(
-      Streams.sessionizeEventTime(events, gapMs = 30L * 60 * 1000,
-          watermark = "30 minutes")
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination())
+    runToParquet(s, Streams.sessionizeEventTime(csvStream(s, csvSchema, in)
+        .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id",
+          lit("e").as("event_type"), $"value")
+        .as[Streams.Event], gapMs = 30L * 60 * 1000, watermark = "30 minutes")
+      .toDF(), out, ck)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"sess_start")
     s.read.parquet(out)
@@ -633,6 +591,15 @@ object StreamQueries {
        |FROM sess GROUP BY user_id, session_n
        |ORDER BY user_id, session_n""".stripMargin
 
+  /** One side of the interval-join gates: the staged `c`/`p` dir as a
+    * file stream, columns prefixed `click_`/`purchase_`, watermarked 1 h.
+    */
+  private def joinSide(s: SparkSession, path: String, prefix: String): DataFrame =
+    csvStream(s, "event_id BIGINT, user_id BIGINT, us BIGINT", path)
+      .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
+        timestamp_micros(col("us")).as(s"${prefix}_ts"))
+      .withWatermark(s"${prefix}_ts", "1 hour")
+
   /** STREAM-STREAM interval join under the gate: clicks and purchases
     * replayed as two independent file streams, inner-joined on user
     * with `purchase.ts ∈ [click.ts, click.ts + 30 min]`. Each side is
@@ -662,57 +629,21 @@ object StreamQueries {
       stageCsv(clicks.filter($"event_id" % 2 =!= 0), in, "c2")
       stageCsv(purchases.filter($"event_id" % 2 === 0), inP, "p1")
       stageCsv(purchases.filter($"event_id" % 2 =!= 0), inP, "p2")
-      val t0 = new java.io.File(s"$in/c1.csv").lastModified()
-      require(new java.io.File(s"$in/c2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$inP/p2.csv").setLastModified(t0 + 10000),
-        s"could not order staged batch files by mtime under $in")
+      stampAfter(s"$in/c1.csv", s"$in/c2.csv" -> 10000L, s"$inP/p2.csv" -> 10000L)
       0L
     }
-    val in = s"$root/c"; val inP = s"$root/p"
     val (out, ck) = freshOutCk()
-    val csvSchema = "event_id BIGINT, user_id BIGINT, us BIGINT"
-    def side(path: String, prefix: String) = s.readStream
-      .schema(csvSchema).option("header", "true")
-      .option("maxFilesPerTrigger", "1").csv(path)
-      .select($"event_id".as(s"${prefix}_id"), $"user_id".as(s"${prefix}_user"),
-        timestamp_micros($"us").as(s"${prefix}_ts"))
-      .withWatermark(s"${prefix}_ts", "1 hour")
-    withStatePartitions(s)(side(in, "click").join(side(inP, "purchase"),
+    runToParquet(s, joinSide(s, s"$root/c", "click")
+      .join(joinSide(s, s"$root/p", "purchase"),
         $"click_user" === $"purchase_user" &&
           $"purchase_ts" >= $"click_ts" &&
           $"purchase_ts" <= $"click_ts" + expr("INTERVAL 30 MINUTES"))
       .select($"click_id", $"purchase_id", $"click_user".as("user_id"),
-        (unix_micros($"purchase_ts") - unix_micros($"click_ts")).as("delta_us"))
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        (unix_micros($"purchase_ts") - unix_micros($"click_ts")).as("delta_us")),
+      out, ck)
     s.read.parquet(out).orderBy($"click_id", $"purchase_id")
   }
 
-  /** STREAM-STREAM LEFT OUTER interval join under the gate — the outer
-    * semantics batch users get wrong first: an unmatched click must
-    * surface exactly once, null-padded, and only when the watermark
-    * proves no matching purchase can still arrive (state expiry emits
-    * it — nothing else may). Staging mirrors [[streamIntervalJoin]]
-    * (two files per side, cross-batch matches forced), plus the
-    * sentinel-watermark technique from [[streamTumblingCounts]] applied
-    * to BOTH sides: the join's event-time clock is the min of the two
-    * sides' watermarks, so each side stages two far-future sentinel
-    * files (user -1) — the first pair advances both watermarks past
-    * every real click's expiry point, the second pair drives the
-    * micro-batch in which the join state actually evicts and emits the
-    * null-padded rows before AvailableNow terminates. The sentinels
-    * pair only with each other (no real user is -1) and are dropped in
-    * the final batch read. Oracle = the plain batch LEFT JOIN with the
-    * identical interval predicate; the order key coalesces the nullable
-    * purchase_id (Spark sorts nulls first, DuckDB last — never let a
-    * NULL reach the comparator's sort).
-    */
   /** Shared body of the outer interval-join gates: identical two-sided
     * staging and sentinel cadence, parameterized join mode. LEFT OUTER
     * emits unmatched clicks null-padded at state expiry; FULL OUTER
@@ -722,8 +653,8 @@ object StreamQueries {
     * (for leftOuter the click side is never null, so the coalesce is
     * the identity there and the two gates share one body).
     */
-  private def outerIntervalGate(s: org.apache.spark.sql.SparkSession,
-      dir: String, mode: String): org.apache.spark.sql.DataFrame = {
+  private def outerIntervalGate(s: SparkSession, dir: String,
+                                mode: String): DataFrame = {
     import s.implicits._
     val (root, _) = stagedInputs("outerinterval", dir) { root =>
       val in = s"$root/c"; val inP = s"$root/p"
@@ -756,44 +687,45 @@ object StreamQueries {
       // hash-identical at all three SFs).
       stageCsv(sentinel(-1L, 1), in, "c2")
       stageCsv(sentinel(-3L, 1), inP, "p2")
-      val t0 = new java.io.File(s"$in/c1.csv").lastModified()
-      val ordered = Seq(s"$in/c2.csv" -> 1, s"$inP/p2.csv" -> 1)
-        .forall { case (f, i) =>
-          new java.io.File(f).setLastModified(t0 + i * 10000L) }
-      require(ordered, s"could not order staged batch files by mtime under $in")
+      stampAfter(s"$in/c1.csv", s"$in/c2.csv" -> 10000L, s"$inP/p2.csv" -> 10000L)
       maxUs
     }
-    val in = s"$root/c"; val inP = s"$root/p"
     val (out, ck) = freshOutCk()
-    val csvSchema = "event_id BIGINT, user_id BIGINT, us BIGINT"
-    def side(path: String, prefix: String) = s.readStream
-      .schema(csvSchema).option("header", "true")
-      .option("maxFilesPerTrigger", "1").csv(path)
-      .select($"event_id".as(s"${prefix}_id"), $"user_id".as(s"${prefix}_user"),
-        timestamp_micros($"us").as(s"${prefix}_ts"))
-      .withWatermark(s"${prefix}_ts", "1 hour")
-    withStatePartitions(s)(side(in, "click").join(side(inP, "purchase"),
+    runToParquet(s, joinSide(s, s"$root/c", "click")
+      .join(joinSide(s, s"$root/p", "purchase"),
         $"click_user" === $"purchase_user" &&
           $"purchase_ts" >= $"click_ts" &&
           $"purchase_ts" <= $"click_ts" + expr("INTERVAL 30 MINUTES"),
         mode)
       .select($"click_id", $"purchase_id",
         coalesce($"click_user", $"purchase_user").as("user_id"),
-        (unix_micros($"purchase_ts") - unix_micros($"click_ts")).as("delta_us"))
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        (unix_micros($"purchase_ts") - unix_micros($"click_ts")).as("delta_us")),
+      out, ck)
     s.read.parquet(out)
       .filter($"user_id" >= 0)
       .orderBy(coalesce($"click_id", lit(-1L)),
         coalesce($"purchase_id", lit(-1L)))
   }
 
+  /** STREAM-STREAM LEFT OUTER interval join under the gate — the outer
+    * semantics batch users get wrong first: an unmatched click must
+    * surface exactly once, null-padded, and only when the watermark
+    * proves no matching purchase can still arrive (state expiry emits
+    * it — nothing else may). Staging mirrors [[streamIntervalJoin]]
+    * (two files per side, cross-batch matches forced), plus the
+    * sentinel-watermark technique from [[streamTumblingCounts]] applied
+    * to BOTH sides: the join's event-time clock is the min of the two
+    * sides' watermarks, so each side stages two far-future sentinel
+    * files (user -1) — the first pair advances both watermarks past
+    * every real click's expiry point, the second pair drives the
+    * micro-batch in which the join state actually evicts and emits the
+    * null-padded rows before AvailableNow terminates. The sentinels
+    * pair only with each other (no real user is -1) and are dropped in
+    * the final batch read. Oracle = the plain batch LEFT JOIN with the
+    * identical interval predicate; the order key coalesces the nullable
+    * purchase_id (Spark sorts nulls first, DuckDB last — never let a
+    * NULL reach the comparator's sort).
+    */
   val streamOuterIntervalJoin: Q = (s, dir) =>
     outerIntervalGate(s, dir, "leftOuter")
 
@@ -849,28 +781,15 @@ object StreamQueries {
       stageCsv(ev, in, "b1")
       // the re-delivered file: every 4th event again, byte-identical
       stageCsv(ev.filter($"event_id" % 4 === 0), in, "b2")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000),
-        s"could not order staged batch files by mtime under $in")
+      stampAfter(s"$in/b1.csv", s"$in/b2.csv" -> 10000L)
       0L
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema("event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE")
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s,
+        "event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE", in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "1 hour")
-      .dropDuplicates("event_id")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+      .dropDuplicates("event_id"), out, ck)
     s.read.parquet(out)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), countDistinct($"event_id").as("n_ids"),
@@ -938,30 +857,15 @@ object StreamQueries {
       stageCsv(slice
         .select(lit("b3").as("src"), $"event_id", ($"us" + 8 * H).as("us"),
           $"event_type", $"value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000),
-        s"could not order staged batch files by mtime under $in")
-      require(new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
+      stampAfter(s"$in/b1.csv", s"$in/b2.csv" -> 10000L, s"$in/b3.csv" -> 20000L)
       maxUs
     }
     val (out, ck) = freshOutCk()
-    withStatePartitions(s)(s.readStream
-      .schema("src STRING, event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE")
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s,
+        "src STRING, event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE", in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+      .dropDuplicatesWithinWatermark("event_id"), out, ck)
     s.read.parquet(out)
       .groupBy($"event_type", $"src")
       .agg(count(lit(1)).as("n"), dsum($"value").as("total_value"))
@@ -1018,47 +922,23 @@ object StreamQueries {
     import graft.functions.Exact.dsum
     val csvSchema = "event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE"
     val (in, _) = stagedInputs("staticjoin", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
         .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"),
-          $"event_type", $"value")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, maxUs + 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b2")
-      stageCsv(Seq((-2L, maxUs + 2 * 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          $"event_type", $"value"), csvSchema)
     }
     val (out, ck) = freshOutCk()
     val dim = Seq(("purchase", "revenue"), ("click", "engagement"),
       ("view", "engagement"), ("signup", "acquisition"), ("error", "ops"))
       .toDF("event_type", "category")
-    withStatePartitions(s)(s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    runToParquet(s, csvStream(s, csvSchema, in)
       .withColumn("ts", timestamp_micros($"us"))
       .withWatermark("ts", "10 minutes")
       .join(broadcast(dim), "event_type")
       .groupBy(window($"ts", "10 minutes"), $"category")
       .agg(count(lit(1)).as("n"), dsum($"value").as("total_value"))
       .select($"window.start".cast("timestamp_ntz").as("w_start"),
-        $"category", $"n", $"total_value")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination())
+        $"category", $"n", $"total_value"), out, ck)
     s.read.parquet(out).orderBy($"w_start", $"category")
   }
 
@@ -1110,9 +990,7 @@ object StreamQueries {
           lit("u2").as("src"), lit(2L).as("seq"), $"o_orderstatus")
       stageCsv(u1, in, "b1")
       stageCsv(u2, in, "b2")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000),
-        s"could not order staged batch files by mtime under $in")
+      stampAfter(s"$in/b1.csv", s"$in/b2.csv" -> 10000L)
       0L
     }
     val (_, ck) = freshOutCk()
@@ -1140,13 +1018,9 @@ object StreamQueries {
     graft.Scratch.copyTree(Paths.get(fixRoot), Paths.get(root))
     val csvSchema = "o_orderkey BIGINT, o_totalprice DOUBLE, src STRING, " +
       "seq BIGINT, o_orderstatus STRING"
-    withStatePartitions(s)(s.readStream
-      .schema(csvSchema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", "1")
-      .csv(in)
+    withStatePartitions(s)(csvStream(s, csvSchema, in)
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         // AvailableNow can fire a trailing no-data batch; committing it
         // would publish a duplicate version — skip, don't commit empty
         if (!batch.isEmpty) {
@@ -1170,7 +1044,7 @@ object StreamQueries {
         }
       }
       .option("checkpointLocation", ck)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination())
     val latest = graft.operators.Snapshots.latestVersion(root)
@@ -1253,45 +1127,21 @@ object StreamQueries {
     import graft.functions.Exact.dsum
     val csvSchema = "event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE"
     val (staged, _) = stagedInputs("restart", dir) { in =>
-      val ev = graft.Tables(s, dir, "events")
+      stageWithSentinels(s, in, graft.Tables(s, dir, "events")
         .filter($"user_id" <= 300)
         .select($"event_id", unix_micros($"ts".cast("timestamp")).as("us"),
-          $"event_type", $"value")
-      stageCsv(ev, in, "b1")
-      val maxUs = s.read.schema(csvSchema).option("header", "true")
-        .csv(s"$in/b1.csv").agg(max($"us")).head().getLong(0)
-      stageCsv(Seq((-1L, maxUs + 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b2")
-      stageCsv(Seq((-2L, maxUs + 2 * 86400L * 1000000, "__sentinel__", 0.0))
-        .toDF("event_id", "us", "event_type", "value"), in, "b3")
-      val t0 = new java.io.File(s"$in/b1.csv").lastModified()
-      require(new java.io.File(s"$in/b2.csv").setLastModified(t0 + 10000) &&
-        new java.io.File(s"$in/b3.csv").setLastModified(t0 + 20000),
-        s"could not order staged batch files by mtime under $in")
-      maxUs
+          $"event_type", $"value"), csvSchema)
     }
     // one definition, two query lifetimes: the restarted stream must be
     // the same plan for the checkpoint to bind
     def runToCompletion(runIn: String, out: String, ck: String): Unit =
-      withStatePartitions(s)(s.readStream
-        .schema(csvSchema)
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .csv(runIn)
+      runToParquet(s, csvStream(s, csvSchema, runIn)
         .withColumn("ts", timestamp_micros($"us"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window($"ts", "10 minutes"), $"event_type")
         .agg(count(lit(1)).as("n"), dsum($"value").as("total_value"))
         .select($"window.start".cast("timestamp_ntz").as("w_start"),
-          $"event_type", $"n", $"total_value")
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination())
+          $"event_type", $"n", $"total_value"), out, ck)
     val (runIn, fixOut, fixCk) = graft.Artifacts.memo(s"stream.restart|$dir") {
       val in = s"${graft.Scratch.dir}/graft_stream_" +
         s"${graft.Scratch.runToken}_${invocation.incrementAndGet()}_in"

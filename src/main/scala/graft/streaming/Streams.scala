@@ -52,47 +52,11 @@ object Streams {
     * sessions; processing-time timeout flushes idle users' state.
     */
   def sessionize(events: Dataset[Event], gapMs: Long = 30L * 60 * 1000)
-      : Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption
-              .map(s => Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n))
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.end <= gapMs =>
-                  // min/max on both bounds: a late within-watermark event
-                  // may precede the stored start, and replay must yield
-                  // the same session whether it arrived early or late
-                  cur = Some(s.copy(start = math.min(s.start, t),
-                    end = math.max(s.end, t), n = s.n + 1))
-                case Some(s) =>
-                  closed += Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n)
-                  cur = Some(SessionState(t, t, 1))
-                case None =>
-                  cur = Some(SessionState(t, t, 1))
-              }
-            }
-            cur match {
-              case Some(s) =>
-                state.update(s)
-                state.setTimeoutDuration(gapMs)
-              case None => state.remove()
-            }
-            closed.result().iterator
-          }
-      }
-  }
+      : Dataset[Session] =
+    sessionFold(events, GroupStateTimeout.ProcessingTimeTimeout, gapMs) {
+      case (state, Some(_)) => state.setTimeoutDuration(gapMs)
+      case (state, None) => state.remove()
+    }
 
   /** Event-time sessionization: like [[sessionize]], but sessions close
     * when the WATERMARK passes their gap deadline rather than on a
@@ -102,16 +66,32 @@ object Streams {
     */
   def sessionizeEventTime(events: Dataset[Event],
                           gapMs: Long = 30L * 60 * 1000,
-                          watermark: String = "10 minutes"): Dataset[Session] = {
+                          watermark: String = "10 minutes"): Dataset[Session] =
+    sessionFold(events.withWatermark("ts", watermark),
+        GroupStateTimeout.EventTimeTimeout, gapMs) { (state, open) =>
+      // close when event time (the watermark) passes the gap
+      open.foreach(s => state.setTimeoutTimestamp(s.end + gapMs))
+    }
+
+  /** The session state machine both sessionizers share. A timed-out
+    * group emits its open session and drops the state; otherwise the
+    * group's events, in (ts, event_id) order, extend the open session or
+    * close it and open the next, and the still-open session is stored.
+    * `arm` then sets the variant's timeout for that open session (None
+    * when the group has none).
+    */
+  private def sessionFold(events: Dataset[Event], timeout: GroupStateTimeout,
+                          gapMs: Long)
+                         (arm: (GroupState[SessionState], Option[SessionState]) => Unit)
+      : Dataset[Session] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState[SessionState, Session](OutputMode.Append, timeout) {
         (user: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
+          def emit(s: SessionState) =
+            Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n)
           if (state.hasTimedOut) {
-            val out = state.getOption
-              .map(s => Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n))
+            val out = state.getOption.map(emit)
             state.remove()
             out.iterator
           } else {
@@ -128,17 +108,14 @@ object Streams {
                   cur = Some(s.copy(start = math.min(s.start, t),
                     end = math.max(s.end, t), n = s.n + 1))
                 case Some(s) =>
-                  closed += Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n)
+                  closed += emit(s)
                   cur = Some(SessionState(t, t, 1))
                 case None =>
                   cur = Some(SessionState(t, t, 1))
               }
             }
-            cur.foreach { s =>
-              state.update(s)
-              // close when event time (the watermark) passes the gap
-              state.setTimeoutTimestamp(s.end + gapMs)
-            }
+            cur.foreach(state.update)
+            arm(state, cur)
             closed.result().iterator
           }
       }

@@ -7,11 +7,19 @@ import graft.model.Location
 
 class CsvIngestSpec extends SparkSpec {
 
+  /** Temp dirs the running test made with [[writeCsv]]. */
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
   private def writeCsv(lines: String*): String = {
     val dir = Files.createTempDirectory("graft_csv_test")
+    dirs += dir.toFile
     Files.writeString(dir.resolve("part.csv"), lines.mkString("\n"))
     dir.toString
   }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally { dirs.foreach(graft.Scratch.deleteRecursively); dirs.clear() }
 
   test("binds columns by header name, independent of column order") {
     // Header order differs from the canonical LOCID,LOCTIMEZONE,... order.

@@ -316,36 +316,92 @@ class StreamsSpec extends SparkSpec {
   test("csvIngestStream dedups per key within each micro-batch") {
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    new java.io.File(inDir).mkdirs()
-    val csv = "locid,loctimezone,country,locname,business\n" +
-      "L1,tz1,US,a,b1\nL2,tz2,UK,c,d\nL1,tz9,DE,e,b2\n"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$inDir/f1.csv"), csv)
+    withTempDir("graft_stream") { tmp =>
+      val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
+      new java.io.File(inDir).mkdirs()
+      val csv = "locid,loctimezone,country,locname,business\n" +
+        "L1,tz1,US,a,b1\nL2,tz2,UK,c,d\nL1,tz9,DE,e,b2\n"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$inDir/f1.csv"), csv)
 
-    val q = Streams.csvIngestStream(s, inDir, outDir, cp)
-    try { q.processAllAvailable() } finally q.stop()
+      val q = Streams.csvIngestStream(s, inDir, outDir, cp)
+      try { q.processAllAvailable() } finally q.stop()
 
-    val out = s.read.parquet(outDir)
-    assert(out.count() == 2) // L1 deduped
-    assert(out.filter($"locid" === "L1").count() == 1)
+      val out = s.read.parquet(outDir)
+      assert(out.count() == 2) // L1 deduped
+      assert(out.filter($"locid" === "L1").count() == 1)
+    }
   }
 
   test("stageCsv caps the driver collect and routes over-cap frames to the writer") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stage_guard").toString
-    val df = (1 to 8).map(i => (i.toLong, s"name$i")).toDF("id", "name")
-    // within cap → driver fast path (returns true)
-    assert(StreamQueries.stageCsv(df, dir, "small", cap = 100))
-    // over cap → distributed Spark writer fallback (returns false), with
-    // the identical single-file contract and identical parsed contents
-    assert(!StreamQueries.stageCsv(df, dir, "big", cap = 5))
-    def rd(n: String) =
-      s.read.option("header", "true").csv(s"$dir/$n.csv")
-        .orderBy($"ID".cast("long"))
-        .collect().map(_.toSeq).toSeq
-    assert(rd("small") == rd("big"))
-    assert(rd("small").length == 8)
+    withTempDir("graft_stage_guard") { dir =>
+      val df = (1 to 8).map(i => (i.toLong, s"name$i")).toDF("id", "name")
+      // within cap → driver fast path (returns true)
+      assert(StreamQueries.stageCsv(df, dir, "small", cap = 100))
+      // over cap → distributed Spark writer fallback (returns false), with
+      // the identical single-file contract and identical parsed contents
+      assert(!StreamQueries.stageCsv(df, dir, "big", cap = 5))
+      def rd(n: String) =
+        s.read.option("header", "true").csv(s"$dir/$n.csv")
+          .orderBy($"ID".cast("long"))
+          .collect().map(_.toSeq).toSeq
+      assert(rd("small") == rd("big"))
+      assert(rd("small").length == 8)
+    }
+  }
+
+  test("stageWithSentinels stages b1's columns as two sentinel rows a day apart") {
+    val s = spark
+    import s.implicits._
+    val t0 = 1704067200000000L // 2024-01-01 00:00 UTC in micros: b1's max us
+    val (d1, d2) = (t0 + 86400000000L, t0 + 2 * 86400000000L)
+    // the four column shapes the sentinel gates stage: (b1 schema, b1,
+    // b2.csv, b3.csv); the sentinel user -1 sessionizes apart from real users
+    val shapes = Seq(
+      ("event_id BIGINT, us BIGINT, event_type STRING, value DOUBLE",
+        Seq((1L, t0 - 5, "click", 1.5), (2L, t0, "view", 2.5))
+          .toDF("event_id", "us", "event_type", "value"),
+        s"EVENT_ID,US,EVENT_TYPE,VALUE\n-1,$d1,__sentinel__,0.0\n",
+        s"EVENT_ID,US,EVENT_TYPE,VALUE\n-2,$d2,__sentinel__,0.0\n"),
+      ("event_id BIGINT, us BIGINT, value DOUBLE",
+        Seq((1L, t0, 1.5), (2L, t0 - 5, 2.5)).toDF("event_id", "us", "value"),
+        s"EVENT_ID,US,VALUE\n-1,$d1,0.0\n",
+        s"EVENT_ID,US,VALUE\n-2,$d2,0.0\n"),
+      ("event_id BIGINT, us BIGINT, event_type STRING",
+        Seq((1L, t0, "click"), (2L, t0 - 5, "view"))
+          .toDF("event_id", "us", "event_type"),
+        s"EVENT_ID,US,EVENT_TYPE\n-1,$d1,__sentinel__\n",
+        s"EVENT_ID,US,EVENT_TYPE\n-2,$d2,__sentinel__\n"),
+      ("event_id BIGINT, user_id BIGINT, us BIGINT, value DOUBLE",
+        Seq((1L, 7L, t0, 1.5), (2L, 8L, t0 - 5, 2.5))
+          .toDF("event_id", "user_id", "us", "value"),
+        s"EVENT_ID,USER_ID,US,VALUE\n-1,-1,$d1,0.0\n",
+        s"EVENT_ID,USER_ID,US,VALUE\n-2,-1,$d2,0.0\n"))
+    withTempDir("graft_sentinels") { root =>
+      def text(f: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+      def mtime(f: String) = new java.io.File(f).lastModified()
+      for (((ddl, b1, b2, b3), i) <- shapes.zipWithIndex) {
+        val in = s"$root/shape$i"
+        new java.io.File(in).mkdirs()
+        assert(StreamQueries.stageWithSentinels(s, in, b1, ddl) == t0)
+        assert(text(s"$in/b2.csv") == b2)
+        assert(text(s"$in/b3.csv") == b3)
+        assert(mtime(s"$in/b2.csv") == mtime(s"$in/b1.csv") + 10000)
+        assert(mtime(s"$in/b3.csv") == mtime(s"$in/b1.csv") + 20000)
+      }
+      // a column with no sentinel value is rejected before anything is staged
+      val e = intercept[IllegalArgumentException](StreamQueries.stageWithSentinels(
+        s, root, Seq((1L, t0, "b1")).toDF("event_id", "us", "src"),
+        "event_id BIGINT, us BIGINT, src STRING"))
+      assert(e.getMessage.contains("src"), e.getMessage)
+      assert(!new java.io.File(s"$root/b1.csv").exists())
+    }
+  }
+
+  /** Runs `body` on a fresh temp dir and deletes the dir afterwards. */
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally graft.Scratch.deleteRecursively(dir)
   }
 }

@@ -13,11 +13,13 @@ class RunSpec extends SparkSpec {
 
   test("explain writes the formatted physical plan to <dir>/<name>_<suffix>.txt") {
     val dir = Files.createTempDirectory("graft_run_explain")
-    Run.explain(spark, sf0001, Seq("q1_pricing_summary"),
-      Some((dir.toString, "t")))
-    val txt = Files.readString(dir.resolve("q1_pricing_summary_t.txt"))
-    assert(txt.contains("== Physical Plan =="), txt)
-    assert(txt.contains("Scan parquet"), txt)
+    try {
+      Run.explain(spark, sf0001, Seq("q1_pricing_summary"),
+        Some((dir.toString, "t")))
+      val txt = Files.readString(dir.resolve("q1_pricing_summary_t.txt"))
+      assert(txt.contains("== Physical Plan =="), txt)
+      assert(txt.contains("Scan parquet"), txt)
+    } finally graft.Scratch.deleteRecursively(dir.toFile)
   }
 
   test("ab passes on equal values, with and without conf overrides") {
