@@ -18,8 +18,7 @@ class ObservabilitySpec extends SparkSpec {
     val df = Gen.locations(spark, 500)
       .observe(obs, count(lit(1)).as("rows"),
         approx_count_distinct(col("locid")).as("keys_approx"))
-    df.write.mode("overwrite")
-      .parquet(s"${System.getProperty("java.io.tmpdir")}/graft_obs")
+    withTempDir("graft_obs")(dir => df.write.mode("overwrite").parquet(s"$dir/obs"))
     assert(obs.get("rows") == 500L)
     val approx = obs.get("keys_approx").asInstanceOf[Long]
     assert(math.abs(approx - 500L) <= 25, s"approx=$approx") // rsd 5%

@@ -250,6 +250,42 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  test("pages JdbcPage does not match keep TakeOrderedAndProject") {
+    // only a bare JDBC table sorted on its whole primary key is read as
+    // one JdbcPage task; every other page keeps Spark's top-k plan
+    import graft.operators.Relational
+    import graft.sinks.JdbcUpsertSink
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val db = s"graftplanpage${graft.Scratch.runToken}"
+    val url = s"jdbc:derby:memory:$db;create=true"
+    try {
+      JdbcUpsertSink.ensureTable(url, JdbcUpsertSink.DerbyUpsert)
+      JdbcUpsertSink.write(
+        graft.sources.Gen.locations(spark, 60).as[graft.model.Location],
+        url, parallelism = 2, dialect = JdbcUpsertSink.DerbyUpsert)
+      val table = spark.read.jdbc(url, "locations", new java.util.Properties())
+      def planOf(df: org.apache.spark.sql.DataFrame, keys: String*): String = {
+        val page = Relational.page(df, keys.map(col), 10, 20)
+        page.collect()
+        page.queryExecution.executedPlan.toString
+      }
+      val orders = spark.read.parquet(s"$sf0001/orders.parquet")
+      Seq(
+        "a non-unique sort key" -> planOf(table, "country"),
+        "a two-column sort" -> planOf(table, "locid", "country"),
+        "a filter above the relation" -> planOf(table.filter($"country" =!= "x"), "locid"),
+        "a parquet source" -> planOf(orders, "o_orderkey")
+      ).foreach { case (what, p) =>
+        assert(p.contains("TakeOrderedAndProject") && !p.contains("JdbcPage"),
+          s"$what must keep the top-k plan:\n$p")
+      }
+      assert(planOf(table, "locid").contains("JdbcPage(locations, LOCID, 20, 10)"))
+    } finally
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;drop=true")
+      catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
+  }
+
   test("Kneser-Ney's global top-20 contexts ride TakeOrderedAndProject, no cartesian") {
     val p = plan("text_kneser_ney_bigram")
     assert(p.contains("TakeOrderedAndProject"),

@@ -398,10 +398,4 @@ class StreamsSpec extends SparkSpec {
       assert(!new java.io.File(s"$root/b1.csv").exists())
     }
   }
-
-  /** Runs `body` on a fresh temp dir and deletes the dir afterwards. */
-  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(dir.toString) finally graft.Scratch.deleteRecursively(dir)
-  }
 }
